@@ -237,7 +237,7 @@ object SparkEntry {
     * `spark.sql.parquet.aggregatePushdown`, and the plan shows
     * `PushedAggregation: [COUNT(*)]` — the whole key is a
     * metadata read, exactly how the single-node baseline answers it
-    * (Q16Probe at sf1.0: 4.0 s scan-count → 0.7 s footer-count,
+    * (BENCH_FULL.md, sf1.0: 4.0 s scan-count → 0.7 s footer-count,
     * and the gap grows with data; at 100 TB counting by scan is a
     * full-corpus read). Events intentionally bypasses Tables.load's
     * ts normalization here — a count needs no cast, and a projection
@@ -389,11 +389,11 @@ object SparkEntry {
   /** n05: yyyyMMdd-int → date with invalid → NULL coercion, on the
     * all-integer native path ([[graft.plans.DateToYyyymmdd]] /
     * [[graft.plans.YyyymmddToIso]]): Hinnant civil-date arithmetic +
-    * direct byte rendering, no java.time object per row. R12Probe:
+    * direct byte rendering, no java.time object per row. BENCH_FULL.md:
     * 0 divergent rows vs the formatter composition over sf1.0,
     * 5.6 s → 1.1 s (beats DuckDB's 1.3 s). [[Normalize.parseYyyymmdd]]
-    * keeps the string surface (junk coercion) where DateParseProbe
-    * measured the formatter winning. */
+    * keeps the string surface (junk coercion) where the A/B in
+    * SURVEY.md measured the formatter winning. */
   private def n05(s: SparkSession, dir: String): DataFrame = {
     val ival = Normalize.dateToYyyymmdd(col("o_orderdate"))
     val mixed = when(col("o_orderkey") % 100 === 0, lit(99999999))
@@ -491,7 +491,7 @@ object SparkEntry {
     * the native single-pass extractor [[graft.plans.JsonLongField]] —
     * the schema is one static long field, so the Jackson
     * parser-object-per-row path (measured 15× DuckDB at sf1.0) is
-    * replaced by a validating byte walk; R12Probe measured 0
+    * replaced by a validating byte walk; BENCH_FULL.md records 0
     * divergent rows vs from_json over sf1.0 and 6.8 s → 0.76 s. */
   private def q22(s: SparkSession, dir: String): DataFrame = {
     val maybeCorrupt = when(col("event_id") % 50 === 0,
@@ -1964,7 +1964,7 @@ object SparkEntry {
     * 10th doc (the corpus has none), then counted AND scrubbed in a
     * single fused byte pass ([[graft.plans.PiiScan]]; the regex
     * composition paid four pattern traversals per row, measured 15×
-    * DuckDB at sf1.0 — R12Probe: 0 divergent rows, 3.6 s → 0.41 s).
+    * DuckDB at sf1.0 — BENCH_FULL.md: 0 divergent rows, 3.6 s → 0.41 s).
     * The patterns stay the shared cross-engine [[TextFns.EmailRe]] /
     * [[TextFns.PhoneRe]], which the DuckDB oracle runs verbatim. */
   private def n07(s: SparkSession, dir: String): DataFrame = {

@@ -797,13 +797,13 @@ object Dedup {
     * verification above the threshold. The scale path that replaces
     * [[embeddingNearDupPairs]]'s all-pairs block form.
     *
-    * Plan shape (ROUND 11 — bucket-local): candidates are scored IN
-    * PLACE inside each (table, bucket) group through
-    * [[Similarity.bucketLocalScoredPairs]] — vectors ride on the
-    * band rows, the within-bucket pair join's output flows straight
-    * into the codegen cosine and the threshold filter in the same
-    * stage, and only the SURVIVORS (the output pair set) reach an
-    * exchange for the cross-table dedup. The previous shape carried
+    * Plan shape (bucket-local): candidates are scored IN PLACE
+    * inside each (table, bucket) group through
+    * [[Similarity.bucketLocalThresholdPairs]] — a payload rides on
+    * the band rows, the quantized survivor cell scorer bounds each
+    * within-bucket pair in the same stage, and only the SURVIVORS
+    * (the output pair set plus the bound's margin) reach an exchange
+    * for the dedup and the exact re-score. The previous shape carried
     * bare id pairs through a candidate-sized distinct and re-joined
     * vectors afterwards; the 10× replica corpus showed that distinct
     * growing 100× (Θ(Σ m²) rows) while the banded-corpus shuffle the

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * SESSION REQUIREMENT — `spark.sql.sources.bucketing.autoBucketedScan
   * .enabled=false` (set at builder time by every engine entry point:
-  * Verify/Bench/Cli/Explain/Scratch and the test suite). Spark's
+  * Verify/Bench/Cli/Explain and the test suite). Spark's
   * DisableUnnecessaryBucketedScan rule only credits bucketing it can
   * use for exchange elimination; a point probe (`token = 'X'`,
   * `cell IN (...)`) would be silently un-bucketed and lose bucket

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StructType}
 
 import scala.util.Random
 
@@ -158,21 +160,6 @@ object Similarity {
         col("col.id").as("cand_id"))
   }
 
-  /** Bucket-bounded k-NN GRAPH over the whole corpus: every vector's
-    * top-k nearest neighbors among its LSH bucket co-occupants — the
-    * all-nodes neighbor graph SemDeDup-style cluster dedup and graph
-    * clustering consume (vs [[knnBruteAgg]], which answers a BOUNDED
-    * query set exactly; an all-pairs brute graph is O(n²) and never
-    * viable at corpus scale). Candidates come from the same
-    * multi-table hyperplane buckets as the embedding near-dup path:
-    * a bucket equi-join bounds pair generation, each undirected
-    * candidate pair is scored once (one codegen cosine), and the
-    * per-node top-k is the bounded-heap aggregate — map-side
-    * partials, k-row state, no per-node sort. At 100 TB: one banded
-    * shuffle + one pair shuffle, both LSH-bounded; recall is tuned by
-    * numTables/planesPerTable exactly as d07.
-    * Output: (vec_id, rank, nbr_id, sim), rank 1..≤k (a node in no
-    * shared bucket yields no rows — isolated under this banding). */
   /** The exploded (vec_id, tbl, bkt) multi-table hyperplane band
     * table — the ANN candidate-generation shuffle key, factored out
     * so it can feed the one-shot graph ([[knnGraphBucketed]]) or be
@@ -192,6 +179,27 @@ object Similarity {
       .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bkt"))
   }
 
+  /** Bucket-bounded k-NN GRAPH over the whole corpus: every vector's
+    * top-k nearest neighbors among its LSH bucket co-occupants — the
+    * all-nodes neighbor graph SemDeDup-style cluster dedup and graph
+    * clustering consume (vs [[knnBruteAgg]], which answers a BOUNDED
+    * query set exactly; an all-pairs brute graph is O(n²) and never
+    * viable at corpus scale). Candidates come from the same
+    * multi-table hyperplane buckets as the embedding near-dup path,
+    * each (tbl, bkt) bucket is scored in place by the retention cell
+    * scorer ([[symRetainedPartialsFromBanded]]: per-node k-heaps
+    * updated inside the Σm² cell loop, so no candidate pair is ever
+    * materialized), and the per-node top-k of the partials is the
+    * bounded-heap aggregate — map-side partials, k-row state, no
+    * per-node sort. At 100 TB: one banded shuffle + one cell shuffle,
+    * both linear in the corpus; recall is tuned by
+    * numTables/planesPerTable exactly as d07.
+    *
+    * Ids must be integral ([[integralIdType]]): narrower integral
+    * types are scored as bigint and `vec_id` is returned in its input
+    * type; any other type is rejected up front.
+    * Output: (vec_id, rank, nbr_id, sim), rank 1..≤k (a node in no
+    * shared bucket yields no rows — isolated under this banding). */
   def knnGraphBucketed(
       corpus: DataFrame,
       idCol: String,
@@ -201,23 +209,37 @@ object Similarity {
       planesPerTable: Int = 4,
       dim: Int = 64,
       seed: Long = 42L,
-      maxBucketRows: Int = 2048): DataFrame =
-    // bigint ids: the FUSED top-k partition scorer — per-node k-heaps
-    // maintained inside the Σm² cell loop, so the pair stream is
-    // never materialized at all (the pair-emitting forms push every
-    // candidate through a row encoder or SMJ row plumbing just for
-    // the aggregate to throw it away — see symTopKFromBanded).
-    if (corpus.schema(idCol).dataType ==
-        org.apache.spark.sql.types.LongType) {
-      val banded = bandedWithVecs(corpus, idCol, vecCol, numTables,
-        planesPerTable, dim, seed).cache()
-      banded.count()
-      retireBandedCaches(Seq(banded))
-      symTopKFromBanded(banded, k, dedupIds = true, maxBucketRows)
-    } else symTopK(
-      bucketLocalScoredPairs(corpus, idCol, vecCol, numTables,
-        planesPerTable, dim, seed, maxBucketRows),
-      k, dedupIds = true)
+      maxBucketRows: Int = 2048): DataFrame = {
+    val idType = integralIdType(corpus.schema, idCol)
+    val banded = bandedWithVecs(widenIds(corpus, idCol), idCol, vecCol,
+      numTables, planesPerTable, dim, seed).cache()
+    banded.count()
+    retireBandedCaches(Seq(banded))
+    restoreIds(symTopKFromBanded(banded, k, maxBucketRows), idType)
+  }
+
+  /** The id rule of the retention scorers ([[knnGraphBucketed]],
+    * [[symEdgesFromBanded]]): their per-node heaps key on bigint, so
+    * an integral id column is accepted (and widened to bigint by
+    * [[widenIds]]) and every other type is rejected here, before any
+    * plan is built — a string id would otherwise become a null heap
+    * key and silently vanish from the graph. Returns the input type,
+    * for [[restoreIds]]. */
+  private[graft] def integralIdType(schema: StructType,
+      idCol: String): DataType = schema(idCol).dataType match {
+    case t @ (LongType | IntegerType | ShortType | ByteType) => t
+    case t => throw new IllegalArgumentException(
+      s"id column `$idCol` has type ${t.simpleString}; the k-NN graph " +
+        "needs integral ids (tinyint, smallint, int or bigint)")
+  }
+
+  private def widenIds(df: DataFrame, idCol: String): DataFrame =
+    if (df.schema(idCol).dataType == LongType) df
+    else df.withColumn(idCol, col(idCol).cast(LongType))
+
+  private def restoreIds(df: DataFrame, idType: DataType): DataFrame =
+    if (idType == LongType) df
+    else df.withColumn("vec_id", col("vec_id").cast(idType))
 
   /** The candidate-JOIN form knnGraphBucketed used through round 10:
     * bare-id pairs → global distinct → two vector-fetch joins →
@@ -253,63 +275,33 @@ object Similarity {
     symTopK(scored, k)
   }
 
-  /** Bucket-LOCAL LSH pair scoring — the shared candidate engine of
-    * the embedding near-dup pairs ([[graft.operators.Dedup
-    * .embeddingNearDupPairsBucketed]]) and the k-NN graph
-    * ([[knnGraphBucketed]]). Same multi-table hyperplane banding as
-    * [[embBandTable]] (identical buckets for identical params/seed),
-    * but vectors RIDE ON the band rows and each (tbl, bkt) bucket is
-    * scored in place: the pair join's output flows straight into the
-    * codegen cosine inside the same stage — no exchange ever carries
-    * a candidate pair. What shuffles is the banded corpus itself
-    * (n·numTables rows × dim floats — linear in corpus size and
-    * independent of dup mass), vs the candidate-join form's Θ(Σ m²)
-    * bare-id pair exchange + distinct, which the 10× replica corpus
-    * showed growing 100× (BENCH_FULL.md round 11: the sf1.0 pair
-    * monsters). The crossover favors id-pairs only when candidates
-    * are SPARSER than n·dim/4 — never true for near-dup banding,
-    * whose buckets are sized to catch pairs.
+  /** The live banded generation: the cached band frames of the most
+    * recent one-shot banded call ([[knnGraphBucketed]],
+    * [[bucketLocalThresholdPairs]]).
     *
-    * Hot-bucket guard (result-invisible): same triangle sub-blocking
-    * as [[graft.operators.Dedup.fuzzyMatchPairs]] — bucket sizes are
-    * measured (one narrow count, broadcast back: O(tables·2^planes)
-    * rows), buckets above `maxBucketRows` split into g deterministic
-    * sub-blocks by id hash, and each unordered sub-block CELL (i ≤ j)
-    * scores once, so per-task work is capped at maxBucketRows² dots
-    * and per-task memory at the join's bounded key group — a hot
-    * bucket becomes more tasks, not a bigger one. Cold buckets take
-    * g = 1 (exactly the plain within-bucket join), so the emitted
-    * pair set is IDENTICAL for any cap.
+    * Those calls cache their banded frame and materialize it EAGERLY
+    * (one count): the scoring plan reads it from several places (the
+    * bucket-size count, the cell tagging, and AQE's concurrent
+    * exchange materialization), and a lazy cache lets those race —
+    * each stage recomputes the full projection pass before any one of
+    * them commits the cache (measured: 4 parallel 4.3 s stages doing
+    * identical work at sf1.0). One eager pass pays the projections
+    * once; downstream stages read the cache.
     *
-    * Output: (a_id, b_id, sim) with a_id < b_id, self-pairs excluded,
-    * one row per SHARED table (duplicates across tables carry
-    * bit-equal sims — CosineSim is exactly symmetric and the pair's
-    * vectors are the same in every occurrence); consumers dedup at
-    * output granularity (near-dup: filter-then-distinct; graph:
-    * the id-deduping top-k heap). The banded frame is cached and
-    * materialized EAGERLY (one count): the scoring plan reads it
-    * from four places (count frame, both tile sides, and AQE's
-    * concurrent exchange materialization), and a lazy cache lets
-    * those race — each stage recomputes the full projection pass
-    * before any one of them commits the cache (measured: 4 parallel
-    * 4.3 s stages doing identical work at sf1.0). One eager pass
-    * pays the projections once; downstream stages read the cache.
-    *
-    * Cache lifecycle: the cached banded frame must outlive THIS
-    * call (the returned pair plan is lazy and reads it at the
-    * consumer's action), so it cannot unpersist here — instead each
-    * call RETIRES the previous call's banded cache (generation
-    * slot), capping residency at one n·numTables-row vector frame
-    * per session instead of one per batch call; [[releaseBandedCache]]
+    * Cache lifecycle: the cached frame must outlive the call (the
+    * returned plan is lazy and reads it at the consumer's action), so
+    * it cannot unpersist there — instead each call RETIRES the
+    * previous call's banded caches ([[retireBandedCaches]]),
+    * capping residency at one n·numTables-row vector frame per
+    * session instead of one per batch call; [[releaseBandedCache]]
     * drops the last one deterministically once its consumer has
     * acted. */
   private val liveBanded =
     new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](Nil)
 
-  /** Unpersist the most recent [[bucketLocalScoredPairs]] /
-    * [[bucketLocalThresholdPairs]] banded caches. Safe to call after
-    * the consuming action; a later call that still needs one would
-    * transparently recompute. */
+  /** Unpersist the live banded generation ([[liveBanded]]). Safe to
+    * call after the consuming action; a later call that still needs
+    * one would transparently recompute. */
   def releaseBandedCache(): Unit = {
     val prev = liveBanded.getAndSet(Nil)
     prev.foreach(_.unpersist(false))
@@ -317,27 +309,10 @@ object Similarity {
 
   /** Install this call's cached frames as the live banded generation,
     * retiring the previous call's (capping cache residency at one
-    * generation per session — see [[bucketLocalScoredPairs]]'s
-    * lifecycle note). */
+    * generation per session — the lifecycle note on [[liveBanded]]). */
   private def retireBandedCaches(dfs: Seq[DataFrame]): Unit = {
     val prev = liveBanded.getAndSet(dfs)
     prev.filterNot(p => dfs.exists(_ eq p)).foreach(_.unpersist(false))
-  }
-
-  private[graft] def bucketLocalScoredPairs(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      numTables: Int,
-      planesPerTable: Int,
-      dim: Int,
-      seed: Long,
-      maxBucketRows: Int): DataFrame = {
-    val banded = bandedWithVecs(corpus, idCol, vecCol, numTables,
-      planesPerTable, dim, seed).cache()
-    banded.count()
-    retireBandedCaches(Seq(banded))
-    scoredPairsFromBanded(banded, maxBucketRows)
   }
 
   /** The vector-carrying band table (vec_id, v, tbl, bkt) —
@@ -345,8 +320,9 @@ object Similarity {
     * bucket assignment for identical params/seed. Factored out so a
     * streaming fold can band its batch ONCE, derive the id-only band
     * rows for the stored probe layout (`.drop("v")` flows from the
-    * same cache), and feed the vector-carrying rows to
-    * [[scoredPairsFromBanded]]. Caller caches.
+    * same cache), and feed the vector-carrying rows to the cell
+    * scorers ([[symEdgesFromBanded]], [[thresholdSurvivorsFromBanded]]).
+    * Caller caches.
     *
     * `spread = false` skips the pre-projection repartition for
     * callers whose input is already spread to the session's
@@ -388,69 +364,71 @@ object Similarity {
         col("col").as("bkt"))
   }
 
-  /** The scoring half of [[bucketLocalScoredPairs]]: triangle-tiled
-    * within-bucket pair JOIN over a [[bandedWithVecs]] frame, cosine
-    * inline. NOTE (r15): when the consumer immediately prunes or
-    * filters the pair stream, the fused partition-scorer forms beat
-    * this join ([[symRetainedPartialsFromBanded]] for the per-node
-    * retention folds, [[thresholdSurvivorsFromBanded]] for
-    * threshold-filter callers) — a pair-EMITTING mapPartitions form
-    * was measured and REJECTED: pushing the Σm² stream through a row
-    * encoder costs more than SMJ feeding codegen straight into the
-    * downstream aggregate (s16 at sf1.0: 438 vs 151 CPU-s). This join
-    * form remains the general pair source and the test-side equality
-    * oracle. See [[bucketLocalScoredPairs]] for the contract. */
-  private[graft] def scoredPairsFromBanded(
-      banded: DataFrame,
-      maxBucketRows: Int): DataFrame =
-    scoredPairsFromBandedJoin(banded, maxBucketRows)
-
+  /** The triangle-tiled within-bucket pair JOIN over a
+    * [[bandedWithVecs]] frame, cosine inline — the float survivors'
+    * path for non-bigint ids ([[thresholdSurvivorsFromBanded]]).
+    * Where a consumer prunes or filters the pair stream at once, the
+    * cell scorers below beat this join; a pair-EMITTING mapPartitions
+    * form was measured and
+    * REJECTED — pushing the Σm² stream through a row encoder costs
+    * more than SMJ feeding codegen straight into the downstream
+    * aggregate (s16 at sf1.0: 438 vs 151 CPU-s).
+    *
+    * Output: (a_id, b_id, sim) with a_id < b_id, self-pairs excluded,
+    * one row per SHARED table (duplicates across tables carry
+    * bit-equal sims — CosineSim is exactly symmetric and the pair's
+    * vectors are the same in every occurrence); consumers dedup at
+    * output granularity. */
   private[graft] def scoredPairsFromBandedJoin(
       banded: DataFrame,
       maxBucketRows: Int): DataFrame = {
     require(maxBucketRows > 0, s"maxBucketRows must be positive: $maxBucketRows")
-    // measure: bucket sizes (narrow keys, map-side-combined count),
-    // broadcast back — the count frame is O(numTables · 2^planes)
-    // rows regardless of corpus size. Fresh aliases on the count side
-    // (counts derives from banded — self-join ambiguity otherwise).
-    val counts = banded.groupBy(col("tbl"), col("bkt"))
-      .agg(count(lit(1)).as("__m"))
-      .select(col("tbl").as("__ctbl"), col("bkt").as("__cbkt"),
-        col("__m"))
-    val withSub = banded
-      .join(broadcast(counts),
-        col("tbl") === col("__ctbl") && col("bkt") === col("__cbkt"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        when(col("__m") > maxBucketRows,
-          ceil(col("__m") / lit(maxBucketRows.toDouble)).cast("long"))
-          .otherwise(lit(1L)).as("__g"))
-      .withColumn("__u", pmod(xxhash64(col("vec_id")), col("__g")))
-    // triangle cells exactly as fuzzyMatchPairs: left owns the row
-    // coordinate (i = u, j explodes up), right owns the column
-    // (j = u, i explodes down) — every within-bucket pair lands in
-    // exactly one (i, j) cell per shared table
+    // dot / (a.__n · b.__n): the dot is the only per-pair loop — the
+    // norms ride the band rows (computed once per corpus row in
+    // [[bandedWithVecs]]), and the expression reproduces CosineSim's
+    // dot / (sqrt(na) · sqrt(nb)) BIT-identically (same element casts,
+    // same left-to-right double accumulation, sqrt exactly rounded;
+    // equality spec'd against the candidate-join oracle, which still
+    // scores with CosineSim). NULL parity holds too: unequal lengths
+    // or a null element NULL the dot, and a null element NULLs __n.
+    tiledJoin(withSubBlocks(banded, maxBucketRows, Seq("vec_id", "v", "__n")))
+      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
+        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
+        (dotNative(col("a.v"), col("b.v")) / (col("a.__n") * col("b.__n")))
+          .as("sim"))
+  }
+
+  /** The triangle-tiled self-join of a [[withSubBlocks]] frame, sides
+    * aliased `a` and `b` — the tiling of both join forms
+    * ([[scoredPairsFromBandedJoin]], [[prunedPairsJoin]]). Triangle
+    * cells exactly as fuzzyMatchPairs: left owns the row coordinate
+    * (i = u, j explodes up), right owns the column (j = u, i explodes
+    * down), so every within-bucket pair lands in exactly one (i, j)
+    * cell per shared table.
+    *
+    * The quadratic scoring's parallelism must come from the (table,
+    * bucket, cell) HASH, never from whatever partitioning the banded
+    * frame happens to carry: left to the planner, the byte-small band
+    * table gets broadcast (or its exchange AQE-coalesced on input-byte
+    * stats that are blind to the join's quadratic OUTPUT) and the
+    * whole Σm² cosine pass lands on the input's file splits — measured
+    * on s16 at sf1.0: 259 s at 2 tasks on a cold cache vs 11 s at 32
+    * tasks when a prior run's materialized cache stats happened to
+    * force the shuffle (BENCH_FULL.md, the d09/s16 stage evidence).
+    * Explicit repartition(n, keys) on BOTH sides makes the plan
+    * deterministic: keys match the join's equi-keys verbatim (all
+    * non-null, plain ===), so no ENSURE_REQUIREMENTS re-shuffle lands
+    * for AQE to coalesce, and the explicit n is never coalesced.
+    * Shuffled rows are the banded inputs (linear + O(m²/maxBucketRows)
+    * hot-tile replication), not pairs. */
+  private def tiledJoin(withSub: DataFrame): DataFrame = {
     val left = withSub
       .withColumn("__j", explode(sequence(col("__u"), col("__g") - 1)))
       .withColumnRenamed("__u", "__i").drop("__g")
     val right = withSub
       .withColumn("__i", explode(sequence(lit(0L), col("__u"))))
       .withColumnRenamed("__u", "__j").drop("__g")
-    // The quadratic scoring's parallelism must come from the
-    // (table, bucket, cell) HASH, never from whatever partitioning
-    // the banded frame happens to carry: left to the planner, the
-    // byte-small band table gets broadcast (or its exchange
-    // AQE-coalesced on input-byte stats that are blind to the join's
-    // quadratic OUTPUT) and the whole Σm² cosine pass lands on the
-    // input's file splits — measured on s16 at sf1.0: 259 s at 2
-    // tasks on a cold cache vs 11 s at 32 tasks when a prior run's
-    // materialized cache stats happened to force the shuffle
-    // (tools/D09Probe2). Explicit repartition(n, keys) on BOTH sides
-    // makes the plan deterministic: keys match the join's equi-keys
-    // verbatim (all non-null, plain ===), so no ENSURE_REQUIREMENTS
-    // re-shuffle lands for AQE to coalesce, and the explicit n is
-    // never coalesced. Shuffled rows are the banded inputs
-    // (linear + O(m²/maxBucketRows) hot-tile replication), not pairs.
-    val nParts = banded.sparkSession.conf
+    val nParts = withSub.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
     val cellCols = Seq(col("tbl"), col("bkt"), col("__i"), col("__j"))
     val a = left.repartition(nParts, cellCols: _*).alias("a")
@@ -460,40 +438,52 @@ object Similarity {
     // pair once (a vector's sub-block is a function of its id)
     val onceOnly = (col("a.__i") =!= col("a.__j")) ||
       (col("a.vec_id") < col("b.vec_id"))
-    // dot / (a.__n · b.__n): the dot is the only per-pair loop — the
-    // norms ride the band rows (computed once per corpus row in
-    // [[bandedWithVecs]]), and the expression reproduces CosineSim's
-    // dot / (sqrt(na) · sqrt(nb)) BIT-identically (same element casts,
-    // same left-to-right double accumulation, sqrt exactly rounded;
-    // equality spec'd against the candidate-join oracle, which still
-    // scores with CosineSim). NULL parity holds too: unequal lengths
-    // or a null element NULL the dot, and a null element NULLs __n.
     a.join(b,
-        col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
-          col("a.__i") === col("b.__i") && col("a.__j") === col("b.__j") &&
-          onceOnly)
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
-        (dotNative(col("a.v"), col("b.v")) / (col("a.__n") * col("b.__n")))
-          .as("sim"))
+      col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
+        col("a.__i") === col("b.__i") && col("a.__j") === col("b.__j") &&
+        onceOnly)
   }
 
-  // ---- r15 PARTITION SCORER ---------------------------------------
+  // ---- CELL SCORER --------------------------------------------------
   //
   // The triangle-cell pair loop as a mapPartitions over cell-sorted
-  // band rows instead of a self-join: the join form pushed every
+  // band rows instead of a self-join: the join form pushes every
   // candidate PAIR through SMJ row materialization (~1 µs/pair —
   // 170 CPU-s of plumbing per 1.6e8 candidates at sf1.0 for ~10 CPU-s
-  // of dot products). Here each (tbl, bkt, i, j) cell is buffered once
-  // (≤ 2·maxBucketRows rows) and its pairs are scored in a tight
-  // primitive loop; what shuffles is unchanged (the tagged band rows,
-  // linear + hot-tile replication), so the 100 TB posture is the same.
+  // of dot products). What shuffles is unchanged (the tagged band
+  // rows, linear + hot-tile replication), so the 100 TB posture is
+  // the same as the join form's: linear in the corpus and independent
+  // of dup mass, vs the candidate-join oracle's Θ(Σ m²) id-pair
+  // exchange + distinct, which the 10× replica corpus showed growing
+  // 100× (BENCH_FULL.md round 11: the sf1.0 pair monsters).
+  //
+  // One input plan and one per-partition loop serve all three scorers:
+  //  - [[cellSorted]] sub-blocks the buckets, tags each band row with
+  //    its triangle cells, shuffles on the cell and sorts each
+  //    partition by it;
+  //  - [[cellStream]] walks a partition one cell at a time (≤
+  //    2·maxBucketRows rows live), hands the cell to the scorer's cell
+  //    function, streams out whatever that returns, and calls the
+  //    scorer's end-of-partition hook once the input is exhausted.
+  // The three cell functions:
+  //  - retention ([[retentionPartition]]): every scored pair updates
+  //    both endpoints' per-node heaps in place; a cell returns nothing
+  //    unless the live heaps pass [[FlushHeapNodes]], when it returns
+  //    the drained generation, and the end hook drains the rest;
+  //  - float survivors ([[thresholdSurvivorsFromBanded]]): the pairs
+  //    whose exact cosine clears the threshold;
+  //  - quantized survivors ([[prunedPairsPartition]]): the pairs whose
+  //    int8 cosine upper bound clears the threshold.
+  // Retention and float survivors share the float row parse and the
+  // null/length/dot/(n·n) kernel ([[FRow]]). Inside a cell the pair
+  // work is a primitive loop (retention) or a lazy pair iterator
+  // ([[cellPairs]], survivors).
   //
   // Cell tagging mirrors the join form's tiling EXACTLY: a row with
   // sub-block u owns the ROW coordinate of cells (u, j), j ∈ [u, g)
   // (side 0) and the COLUMN coordinate of cells (i, u), i ∈ [0, u)
   // (side 1). The diagonal cell appears ONCE on side 0 — the join
-  // form carried it on both sides and kept `a.vec_id < b.vec_id`,
+  // form carries it on both sides and keeps `a.vec_id < b.vec_id`,
   // which is exactly "each unordered pair of the sub-block once".
 
   /** Triangle-cell tags for one band row: array of (i, j, side). */
@@ -506,8 +496,15 @@ object Similarity {
         lit(1).as("s"))))
 
   /** (__m per bucket broadcast back, __g sub-block count, __u this
-    * row's sub-block) — identical derivation in the join and
-    * partition forms. */
+    * row's sub-block) — the hot-bucket guard shared by the join and
+    * cell forms. Bucket sizes are measured (one narrow count,
+    * broadcast back: O(tables·2^planes) rows), buckets above
+    * `maxBucketRows` split into g deterministic sub-blocks by id hash,
+    * and each unordered sub-block CELL (i ≤ j) scores once, so
+    * per-task work is capped at maxBucketRows² dots — a hot bucket
+    * becomes more tasks, not a bigger one. Cold buckets take g = 1
+    * (exactly the plain within-bucket pairs), so the scored pair set
+    * is IDENTICAL for any cap. */
   private def withSubBlocks(banded: DataFrame, maxBucketRows: Int,
       payload: Seq[String]): DataFrame = {
     val counts = banded.groupBy(col("tbl"), col("bkt"))
@@ -522,6 +519,25 @@ object Similarity {
           ceil(col("__m") / lit(maxBucketRows.toDouble)).cast("long"))
           .otherwise(lit(1L)).as("__g"))): _*)
       .withColumn("__u", pmod(xxhash64(col("vec_id")), col("__g")))
+  }
+
+  /** The cell scorers' input: (payload…, tbl, bkt, __i, __j, __sd),
+    * one row per (band row, triangle cell), hash-partitioned on the
+    * cell at the session's shuffle width (see [[tiledJoin]] for why
+    * the width is explicit) and sorted within each partition by the
+    * cell, so [[cellStream]] sees each cell as one contiguous run. */
+  private def cellSorted(banded: DataFrame, maxBucketRows: Int,
+      payload: Seq[String]): DataFrame = {
+    require(maxBucketRows > 0, s"maxBucketRows must be positive: $maxBucketRows")
+    val nParts = banded.sparkSession.conf
+      .get("spark.sql.shuffle.partitions", "32").toInt
+    val keep = payload.map(col) ++ Seq(col("tbl"), col("bkt"))
+    withSubBlocks(banded, maxBucketRows, payload)
+      .select(keep :+ explode(cellTags(col("__u"), col("__g"))).as("c"): _*)
+      .select(keep ++ Seq(col("c.i").as("__i"), col("c.j").as("__j"),
+        col("c.s").as("__sd")): _*)
+      .repartition(nParts, col("tbl"), col("bkt"), col("__i"), col("__j"))
+      .sortWithinPartitions("tbl", "bkt", "__i", "__j")
   }
 
   /** Numeric vector → primitive doubles + null-element flag (the
@@ -567,48 +583,55 @@ object Similarity {
       s"unexpected code value: ${other.getClass}")
   }
 
-  /** Stream cell-sorted rows, buffer one cell at a time (side 0 → A,
-    * side 1 → B; ≤ 2·maxBucketRows rows live), and emit each cell's
-    * pairs lazily. `parse` reads a row; `pairs` scores one cell
-    * (diag = i == j: unordered pairs of A; off-diagonal: A × B). */
+  private type Cell[R] = scala.collection.mutable.ArrayBuffer[R]
+
+  /** The one per-partition loop of the cell scorers: stream
+    * [[cellSorted]] rows (`tblIdx` = the index of `tbl`), buffer one
+    * cell at a time (side 0 → A, side 1 → B; ≤ 2·maxBucketRows rows
+    * live), pass it to `cell` (diag = i == j: score the unordered
+    * pairs of A; off-diagonal: A × B) and emit what it returns before
+    * the next cell is read. Once the input is exhausted, `end` is
+    * called once and its rows are emitted last. */
   private def cellStream[R, O](
       rows: Iterator[org.apache.spark.sql.Row],
       tblIdx: Int, parse: org.apache.spark.sql.Row => R,
-      pairs: (scala.collection.mutable.ArrayBuffer[R],
-        scala.collection.mutable.ArrayBuffer[R], Boolean) => Iterator[O])
-      : Iterator[O] = new scala.collection.AbstractIterator[O] {
-    private val buf = rows.buffered
-    private var inner: Iterator[O] = Iterator.empty
-    private val a = new scala.collection.mutable.ArrayBuffer[R]
-    private val b = new scala.collection.mutable.ArrayBuffer[R]
-    private def sameCell(r: org.apache.spark.sql.Row,
-        t: Int, k: Int, i: Int, j: Int): Boolean =
-      r.getInt(tblIdx) == t && r.getInt(tblIdx + 1) == k &&
-        r.getInt(tblIdx + 2) == i && r.getInt(tblIdx + 3) == j
-    private def loadCell(): Unit = {
-      val h = buf.head
-      val (t, k, i, j) = (h.getInt(tblIdx), h.getInt(tblIdx + 1),
-        h.getInt(tblIdx + 2), h.getInt(tblIdx + 3))
-      a.clear(); b.clear()
-      while (buf.hasNext && sameCell(buf.head, t, k, i, j)) {
-        val r = buf.next()
-        if (r.getInt(tblIdx + 4) == 0) a += parse(r) else b += parse(r)
+      cell: (Cell[R], Cell[R], Boolean) => Iterator[O],
+      end: () => Iterator[O]): Iterator[O] =
+    new scala.collection.AbstractIterator[O] {
+      private val buf = rows.buffered
+      private var inner: Iterator[O] = Iterator.empty
+      private var ended = false
+      private val a = new Cell[R]
+      private val b = new Cell[R]
+      private def sameCell(r: org.apache.spark.sql.Row,
+          t: Int, k: Int, i: Int, j: Int): Boolean =
+        r.getInt(tblIdx) == t && r.getInt(tblIdx + 1) == k &&
+          r.getInt(tblIdx + 2) == i && r.getInt(tblIdx + 3) == j
+      private def loadCell(): Unit = {
+        val h = buf.head
+        val (t, k, i, j) = (h.getInt(tblIdx), h.getInt(tblIdx + 1),
+          h.getInt(tblIdx + 2), h.getInt(tblIdx + 3))
+        a.clear(); b.clear()
+        while (buf.hasNext && sameCell(buf.head, t, k, i, j)) {
+          val r = buf.next()
+          if (r.getInt(tblIdx + 4) == 0) a += parse(r) else b += parse(r)
+        }
+        inner = cell(a, b, i == j)
       }
-      inner = pairs(a, b, i == j)
+      override def hasNext: Boolean = {
+        while (!inner.hasNext && !ended) {
+          if (buf.hasNext) loadCell()
+          else { ended = true; inner = end() }
+        }
+        inner.hasNext
+      }
+      override def next(): O = { hasNext; inner.next() }
     }
-    override def hasNext: Boolean = {
-      while (!inner.hasNext && buf.hasNext) loadCell()
-      inner.hasNext
-    }
-    override def next(): O = { hasNext; inner.next() }
-  }
 
   /** Lazy pair iterator over one cell: diagonal = unordered index
     * pairs of A; off-diagonal = A × B. `score` returns the output
     * tuple or null to skip the pair. */
-  private def cellPairs[R, O >: Null](
-      a: scala.collection.mutable.ArrayBuffer[R],
-      b: scala.collection.mutable.ArrayBuffer[R],
+  private def cellPairs[R, O >: Null](a: Cell[R], b: Cell[R],
       diag: Boolean, score: (R, R) => O): Iterator[O] =
     new scala.collection.AbstractIterator[O] {
       private val bb = if (diag) a else b
@@ -634,299 +657,249 @@ object Similarity {
       }
     }
 
-  private final class FRow(val id: Long, val v: Array[Double],
-    val nullElem: Boolean, val nNull: Boolean, val n: Double)
+  /** A survivor cell scorer: the [[cellStream]] loop with
+    * [[cellPairs]] as its cell function and no end hook, emitting
+    * (a_id, b_id) for each pair `survivor` keeps. */
+  private def survivorPairs[R](sorted: DataFrame,
+      parse: org.apache.spark.sql.Row => R,
+      survivor: (R, R) => (Long, Long)): DataFrame = {
+    val tblIdx = sorted.schema.fieldIndex("tbl")
+    implicit val enc = org.apache.spark.sql.Encoders.tuple(
+      org.apache.spark.sql.Encoders.scalaLong,
+      org.apache.spark.sql.Encoders.scalaLong)
+    sorted.mapPartitions(rows => cellStream(rows, tblIdx, parse,
+        (a: Cell[R], b: Cell[R], diag: Boolean) =>
+          cellPairs[R, (Long, Long)](a, b, diag, survivor),
+        () => Iterator.empty))
+      .toDF("a_id", "b_id")
+  }
 
-  /** FUSED symmetrize + per-node retention over a [[bandedWithVecs]]
-    * frame (bigint ids): the triangle-cell loop, but each scored pair
-    * updates BOTH endpoints' bounded retention buffers in place
-    * instead of being emitted — only the per-partition partials leave
-    * the scorer (vs the Σm² pair stream, which the pair-emitting
-    * forms pushed through a row encoder or SMJ row plumbing just for
-    * the downstream aggregate to throw away). `keepThreshold = None`
-    * retains per-node top-k ([[graft.plans.TopKBuffer]]); `Some(t)`
-    * retains rank ≤ k OR sim > t ([[graft.plans.ThresholdTopKBuffer]])
-    * — the two [[graft.streaming.Streams]] graph-fold prunes. The
-    * emitted (vec_id, sim, nbr_id) partials feed the SAME downstream
-    * aggregate as before: retention-of-partition-retentions equals
-    * global retention (both buffers are merge-and-truncate monoids
-    * under the (score, id) total order — graphFold's scaladoc), null
-    * sims are skipped exactly as the aggregates' update skips null
-    * scores, and NaN behaves identically (top-k: ranks above all;
-    * threshold: joins neither side). Per-partition state is bounded:
-    * past `FlushHeapNodes` live nodes the partials flush into the
-    * output stream and the map restarts — monoid-safe, so a 100 TB
-    * partition degrades to more partial rows, not more memory. */
+  /** (smaller id, larger id) — the survivors' undirected pair. */
+  private def orderedPair(x: Long, y: Long): (Long, Long) =
+    if (x < y) (x, y) else (y, x)
+
+  /** One float band row of a (vec_id, v, __n, …) cell-sorted frame.
+    * `ok` = the row can score at all: a non-null vector with no null
+    * element and a non-null norm. A pair's sim is null unless both
+    * rows are ok with equal lengths ([[scores]]), else
+    * dot/(n·n) ([[sim]]) — exactly the join form's
+    * `dotNative(a.v, b.v) / (a.__n · b.__n)`, NULL and NaN included. */
+  private final class FRow(val id: Long, val v: Array[Double],
+      val ok: Boolean, val n: Double) {
+    def scores(o: FRow): Boolean = ok && o.ok && v.length == o.v.length
+    def sim(o: FRow): Double = {
+      var dot = 0.0
+      var i = 0
+      while (i < v.length) { dot += v(i) * o.v(i); i += 1 }
+      dot / (n * o.n)
+    }
+  }
+
+  private def parseFRow(r: org.apache.spark.sql.Row): FRow = {
+    val (v, nullElem) = vecToDoubles(r.get(1))
+    val nNull = r.isNullAt(2)
+    new FRow(r.getLong(0), v, v != null && !nullElem && !nNull,
+      if (nNull) 0.0 else r.getDouble(2))
+  }
+
+  /** Past this many live nodes, the retention scorer emits its heaps
+    * as one drained generation and starts a new map (monoid-safe: the
+    * downstream aggregate merges generations). The drained generation
+    * leaves the task as soon as it is drained, so a task holds at most
+    * this many nodes' heaps plus one generation being emitted — a
+    * 100 TB partition degrades to more partial rows, not more
+    * memory. */
   private[graft] var FlushHeapNodes: Int = 1 << 20
 
+  /** The retention cell scorer over one partition of [[cellSorted]]
+    * (vec_id, v, __n, tbl, bkt, __i, __j, __sd) rows: each scored pair
+    * updates BOTH endpoints' bounded retention buffers in place
+    * instead of being emitted, and only the per-node partials
+    * (vec_id, sim, nbr_id) leave the scorer. `keepThreshold = None`
+    * retains per-node top-k ([[graft.plans.TopKBuffer]]); `Some(t)`
+    * retains rank ≤ k OR sim > t ([[graft.plans.ThresholdTopKBuffer]]).
+    * Both buffers dedup by neighbor id (a pair shared by several
+    * tables scores bit-equal in each). Null sims are skipped exactly
+    * as the aggregates' update skips null scores, and NaN behaves
+    * identically (top-k: ranks above all; threshold: joins neither
+    * side). Past `flushAt` live nodes the heaps are drained into the
+    * output at once ([[FlushHeapNodes]]). */
+  private[graft] def retentionPartition(
+      rows: Iterator[org.apache.spark.sql.Row], k: Int,
+      keepThreshold: Option[Double], flushAt: Int)
+      : Iterator[(Long, Double, Long)] = {
+    val mkBuf: () => AnyRef = keepThreshold match {
+      case Some(t) => () => new graft.plans.ThresholdTopKBuffer(k, t, true)
+      case None => () => new graft.plans.TopKBuffer(k, true)
+    }
+    val addTo: (AnyRef, Double, Long) => Unit = keepThreshold match {
+      case Some(_) => (b, s, i) =>
+        b.asInstanceOf[graft.plans.ThresholdTopKBuffer].add(s, i)
+      case None => (b, s, i) =>
+        b.asInstanceOf[graft.plans.TopKBuffer].add(s, i)
+    }
+    val drainBuf: AnyRef => Array[(Double, Long)] = keepThreshold match {
+      case Some(_) => b =>
+        b.asInstanceOf[graft.plans.ThresholdTopKBuffer].held
+      case None => b =>
+        b.asInstanceOf[graft.plans.TopKBuffer].sortedDesc
+    }
+    var heaps = new java.util.HashMap[Long, AnyRef]()
+    def drain(): Iterator[(Long, Double, Long)] = {
+      val out = new scala.collection.mutable.ArrayBuffer[(Long, Double, Long)](
+        heaps.size * math.min(k, 8))
+      val it = heaps.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        drainBuf(e.getValue).foreach(p => out += ((e.getKey, p._1, p._2)))
+      }
+      heaps = new java.util.HashMap[Long, AnyRef]()
+      out.iterator
+    }
+    def heap(id: Long): AnyRef = {
+      var h = heaps.get(id)
+      if (h == null) { h = mkBuf(); heaps.put(id, h) }
+      h
+    }
+    def addPair(x: FRow, y: FRow): Unit = if (x.scores(y)) {
+      val sim = x.sim(y)
+      addTo(heap(x.id), sim, y.id)
+      addTo(heap(y.id), sim, x.id)
+    }
+    cellStream[FRow, (Long, Double, Long)](rows, 3, parseFRow,
+      (a, b, diag) => {
+        var i = 0
+        while (i < a.length) {
+          if (diag) {
+            var j = i + 1
+            while (j < a.length) { addPair(a(i), a(j)); j += 1 }
+          } else {
+            var j = 0
+            while (j < b.length) { addPair(a(i), b(j)); j += 1 }
+          }
+          i += 1
+        }
+        if (heaps.size > flushAt) drain() else Iterator.empty
+      },
+      () => drain())
+  }
+
+  /** FUSED symmetrize + per-node retention over a [[bandedWithVecs]]
+    * frame with bigint ids: [[cellSorted]] feeding
+    * [[retentionPartition]]. The emitted (vec_id, sim, nbr_id)
+    * partials feed the SAME downstream aggregate a scored pair stream
+    * would: retention-of-partition-retentions equals global retention
+    * (both buffers are merge-and-truncate monoids under the
+    * (score, id) total order — graphFold's scaladoc). */
   private[graft] def symRetainedPartialsFromBanded(
       banded: DataFrame, k: Int, keepThreshold: Option[Double],
-      dedupIds: Boolean, maxBucketRows: Int): DataFrame = {
-    require(maxBucketRows > 0, s"maxBucketRows must be positive: $maxBucketRows")
-    val spark = banded.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      maxBucketRows: Int): DataFrame = {
     val flushAt = FlushHeapNodes
-    val tagged = withSubBlocks(banded, maxBucketRows,
-        Seq("vec_id", "v", "__n"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        explode(cellTags(col("__u"), col("__g"))).as("c"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        col("c.i").as("__i"), col("c.j").as("__j"), col("c.s").as("__sd"))
-      .repartition(nParts, col("tbl"), col("bkt"), col("__i"), col("__j"))
-      .sortWithinPartitions("tbl", "bkt", "__i", "__j")
-    val parse = (r: org.apache.spark.sql.Row) => {
-      val (v, nullElem) = vecToDoubles(r.get(1))
-      val nNull = r.isNullAt(2)
-      new FRow(r.getLong(0), v, nullElem, nNull,
-        if (nNull) 0.0 else r.getDouble(2))
-    }
-    // buffer strategy, closed over serializably
-    val thresholdOpt = keepThreshold
     implicit val enc = org.apache.spark.sql.Encoders.tuple(
       org.apache.spark.sql.Encoders.scalaLong,
       org.apache.spark.sql.Encoders.scalaDouble,
       org.apache.spark.sql.Encoders.scalaLong)
-    val triples = tagged.mapPartitions { rows =>
-      val mkBuf: () => AnyRef = thresholdOpt match {
-        case Some(t) => () => new graft.plans.ThresholdTopKBuffer(k, t, dedupIds)
-        case None => () => new graft.plans.TopKBuffer(k, dedupIds)
-      }
-      val addTo: (AnyRef, Double, Long) => Unit = thresholdOpt match {
-        case Some(_) => (b, s, i) =>
-          b.asInstanceOf[graft.plans.ThresholdTopKBuffer].add(s, i)
-        case None => (b, s, i) =>
-          b.asInstanceOf[graft.plans.TopKBuffer].add(s, i)
-      }
-      val drainBuf: AnyRef => Array[(Double, Long)] = thresholdOpt match {
-        case Some(_) => b =>
-          b.asInstanceOf[graft.plans.ThresholdTopKBuffer].held
-        case None => b =>
-          b.asInstanceOf[graft.plans.TopKBuffer].sortedDesc
-      }
-      var heaps = new java.util.HashMap[Long, AnyRef]()
-      var flushed: List[Array[(Long, Double, Long)]] = Nil
-      def drain(): Array[(Long, Double, Long)] = {
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Double, Long)](
-          heaps.size * math.min(k, 8))
-        val it = heaps.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          drainBuf(e.getValue).foreach(p => out += ((e.getKey, p._1, p._2)))
-        }
-        heaps = new java.util.HashMap[Long, AnyRef]()
-        out.toArray
-      }
-      def heap(id: Long): AnyRef = {
-        var h = heaps.get(id)
-        if (h == null) { h = mkBuf(); heaps.put(id, h) }
-        h
-      }
-      def addPair(x: FRow, y: FRow): Unit = {
-        // null sims are SKIPPED exactly as the aggregates' update
-        // skips null scores; NaN flows to the buffers (top-k: ranks
-        // above all; threshold: joins neither side)
-        if (x.v == null || y.v == null || x.v.length != y.v.length ||
-            x.nullElem || y.nullElem || x.nNull || y.nNull) return
-        var dot = 0.0
-        var i = 0
-        val n = x.v.length
-        while (i < n) { dot += x.v(i) * y.v(i); i += 1 }
-        val sim = dot / (x.n * y.n)
-        addTo(heap(x.id), sim, y.id)
-        addTo(heap(y.id), sim, x.id)
-      }
-      val buf = rows.buffered
-      val a = new scala.collection.mutable.ArrayBuffer[FRow]
-      val b = new scala.collection.mutable.ArrayBuffer[FRow]
-      while (buf.hasNext) {
-        val h = buf.head
-        val (t, kk, ci, cj) = (h.getInt(3), h.getInt(4), h.getInt(5),
-          h.getInt(6))
-        a.clear(); b.clear()
-        while (buf.hasNext && {
-          val r = buf.head
-          r.getInt(3) == t && r.getInt(4) == kk && r.getInt(5) == ci &&
-            r.getInt(6) == cj
-        }) {
-          val r = buf.next()
-          if (r.getInt(7) == 0) a += parse(r) else b += parse(r)
-        }
-        if (ci == cj) {
-          var i = 0
-          while (i < a.length) {
-            var j = i + 1
-            while (j < a.length) { addPair(a(i), a(j)); j += 1 }
-            i += 1
-          }
-        } else {
-          var i = 0
-          while (i < a.length) {
-            var j = 0
-            while (j < b.length) { addPair(a(i), b(j)); j += 1 }
-            i += 1
-          }
-        }
-        if (heaps.size > flushAt) flushed ::= drain()
-      }
-      val last = drain()
-      flushed.iterator.flatMap(_.iterator) ++ last.iterator
-    }.toDF("vec_id", "sim", "nbr_id")
-    triples
+    cellSorted(banded, maxBucketRows, Seq("vec_id", "v", "__n"))
+      .mapPartitions(retentionPartition(_, k, keepThreshold, flushAt))
+      .toDF("vec_id", "sim", "nbr_id")
   }
 
   private def symTopKFromBanded(banded: DataFrame, k: Int,
-      dedupIds: Boolean, maxBucketRows: Int): DataFrame =
-    symRetainedPartialsFromBanded(banded, k, None, dedupIds, maxBucketRows)
+      maxBucketRows: Int): DataFrame =
+    symRetainedPartialsFromBanded(banded, k, None, maxBucketRows)
       .groupBy(col("vec_id"))
-      .agg(topKAgg(col("sim"), col("nbr_id"), k, dedupIds).as("top"))
+      .agg(topKAgg(col("sim"), col("nbr_id"), k, dedupIds = true).as("top"))
       .select(col("vec_id"), posexplode(col("top")))
       .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("nbr_id"), col("col.score").as("sim"))
 
   /** Symmetrized, per-batch-PRE-PRUNED edges for the streaming graph
-    * folds ([[graft.streaming.Streams.incrementalKnnGraph]]): bigint
-    * ids take the fused partial scorer above; other id types fall
-    * back to the pair join + two-direction explode (the pre-r15
-    * shape, output-identical by the fold monoid). Output columns:
+    * folds ([[graft.streaming.Streams.incrementalKnnGraph]]): the
+    * retention scorer's partials. Ids follow [[integralIdType]]'s
+    * rule: integral ids are scored as bigint and `vec_id` keeps its
+    * input type; any other type is rejected. Output columns:
     * (vec_id, nbr_id, sim). */
   private[graft] def symEdgesFromBanded(
       banded: DataFrame, k: Int, keepThreshold: Option[Double],
-      maxBucketRows: Int): DataFrame =
-    if (banded.schema("vec_id").dataType ==
-        org.apache.spark.sql.types.LongType)
-      symRetainedPartialsFromBanded(banded, k, keepThreshold,
-        dedupIds = true, maxBucketRows)
-        .select(col("vec_id"), col("nbr_id"), col("sim"))
-    else
-      scoredPairsFromBandedJoin(banded, maxBucketRows)
-        .select(explode(array(
-          struct(col("a_id").as("vec_id"), col("b_id").as("nbr_id"),
-            col("sim")),
-          struct(col("b_id").as("vec_id"), col("a_id").as("nbr_id"),
-            col("sim")))).as("e"))
-        .select(col("e.vec_id"), col("e.nbr_id"), col("e.sim"))
+      maxBucketRows: Int): DataFrame = {
+    val idType = integralIdType(banded.schema, "vec_id")
+    restoreIds(symRetainedPartialsFromBanded(widenIds(banded, "vec_id"), k,
+        keepThreshold, maxBucketRows)
+      .select(col("vec_id"), col("nbr_id"), col("sim")), idType)
+  }
 
   /** WITHIN-batch survivors for the incremental pair fold
     * ([[graft.streaming.Streams.incrementalEmbPairs]]): the float
-    * cell loop with the caller's `sim > threshold` filter fused in —
-    * only surviving (a_id, b_id) leave the scorer (NaN sims survive,
-    * Spark's NaN-above-all `>`; null sims drop), one row per shared
-    * bucket, deduped by the caller. Non-bigint ids fall back to the
+    * survivor cell scorer — only pairs whose sim clears the caller's
+    * `sim > threshold` leave the scorer, as (a_id, b_id) (NaN sims
+    * survive, Spark's NaN-above-all `>`; null sims drop), one row per
+    * shared bucket, deduped by the caller. Non-bigint ids take the
     * pair join + filter. */
   private[graft] def thresholdSurvivorsFromBanded(
       banded: DataFrame, threshold: Double,
       maxBucketRows: Int): DataFrame = {
-    if (banded.schema("vec_id").dataType !=
-        org.apache.spark.sql.types.LongType)
+    if (banded.schema("vec_id").dataType != LongType)
       return scoredPairsFromBandedJoin(banded, maxBucketRows)
         .filter(col("sim") > threshold)
         .select(col("a_id"), col("b_id"))
-    val spark = banded.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val tagged = withSubBlocks(banded, maxBucketRows,
-        Seq("vec_id", "v", "__n"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        explode(cellTags(col("__u"), col("__g"))).as("c"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        col("c.i").as("__i"), col("c.j").as("__j"), col("c.s").as("__sd"))
-      .repartition(nParts, col("tbl"), col("bkt"), col("__i"), col("__j"))
-      .sortWithinPartitions("tbl", "bkt", "__i", "__j")
-    val parse = (r: org.apache.spark.sql.Row) => {
-      val (v, nullElem) = vecToDoubles(r.get(1))
-      val nNull = r.isNullAt(2)
-      new FRow(r.getLong(0), v, nullElem, nNull,
-        if (nNull) 0.0 else r.getDouble(2))
-    }
-    val score = (x: FRow, y: FRow) => {
-      if (x.v == null || y.v == null || x.v.length != y.v.length ||
-          x.nullElem || y.nullElem || x.nNull || y.nNull) null
-      else {
-        var dot = 0.0
-        var i = 0
-        val n = x.v.length
-        while (i < n) { dot += x.v(i) * y.v(i); i += 1 }
-        val sim = dot / (x.n * y.n)
-        // Spark's `>` is NaN-safe: NaN orders above any threshold
-        if (sim > threshold || java.lang.Double.isNaN(sim))
-          (if (x.id < y.id) (x.id, y.id) else (y.id, x.id))
-        else null
-      }
-    }
-    implicit val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong)
-    tagged.mapPartitions { rows =>
-      cellStream(rows, 3, parse,
-        (a: scala.collection.mutable.ArrayBuffer[FRow],
-         b: scala.collection.mutable.ArrayBuffer[FRow], diag: Boolean) =>
-          cellPairs[FRow, (Long, Long)](a, b, diag, (x, y) => score(x, y)))
-    }.toDF("a_id", "b_id")
+    survivorPairs[FRow](
+      cellSorted(banded, maxBucketRows, Seq("vec_id", "v", "__n")),
+      parseFRow, (x, y) =>
+        if (!x.scores(y)) null
+        else {
+          val sim = x.sim(y)
+          // Spark's `>` is NaN-safe: NaN orders above any threshold
+          if (sim > threshold || java.lang.Double.isNaN(sim))
+            orderedPair(x.id, y.id)
+          else null
+        })
   }
 
   private final class QRow(val id: Long, val q: Array[Byte],
-    val nullElem: Boolean, val anyNull: Boolean, val s: Double,
-    val n: Double, val sa: Long)
+    val anyNull: Boolean, val s: Double, val n: Double, val sa: Long)
 
-  /** The quantized prune of [[bucketLocalThresholdPairs]] as a
-    * partition scorer (bigint ids): same rigorous upper bound, same
-    * survivor rule (`ub > threshold` with Spark's NaN-above-everything
-    * comparison; NULL bound → pair dropped), emitting only surviving
-    * (a_id, b_id) — one row per shared bucket, deduped downstream. */
+  /** The quantized survivor cell scorer of [[bucketLocalThresholdPairs]]
+    * (bigint ids): same rigorous upper bound and survivor rule as
+    * [[prunedPairsJoin]] (`ub > threshold` with Spark's
+    * NaN-above-everything comparison; NULL bound → pair dropped),
+    * emitting only surviving (a_id, b_id) — one row per shared bucket,
+    * deduped downstream. */
   private def prunedPairsPartition(
       qbanded: DataFrame,
       threshold: Double,
       maxBucketRows: Int): DataFrame = {
-    val spark = qbanded.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val tagged = withSubBlocks(qbanded, maxBucketRows,
-        Seq("vec_id", "qv", "__s", "__n", "__sa"))
-      .select(col("vec_id"), col("qv"), col("__s"), col("__n"), col("__sa"),
-        col("tbl"), col("bkt"),
-        explode(cellTags(col("__u"), col("__g"))).as("c"))
-      .select(col("vec_id"), col("qv"), col("__s"), col("__n"), col("__sa"),
-        col("tbl"), col("bkt"),
-        col("c.i").as("__i"), col("c.j").as("__j"), col("c.s").as("__sd"))
-      .repartition(nParts, col("tbl"), col("bkt"), col("__i"), col("__j"))
-      .sortWithinPartitions("tbl", "bkt", "__i", "__j")
     val parse = (r: org.apache.spark.sql.Row) => {
       val (q, nullElem) = vecToBytes(r.get(1))
       val sNull = r.isNullAt(2)
       val nNull = r.isNullAt(3)
       val saNull = r.isNullAt(4)
-      new QRow(r.getLong(0), q, nullElem,
+      new QRow(r.getLong(0), q,
         q == null || nullElem || sNull || nNull || saNull,
         if (sNull) 0.0 else r.getDouble(2),
         if (nNull) 0.0 else r.getDouble(3),
         if (saNull) 0L else r.getLong(4))
     }
-    val score = (x: QRow, y: QRow) => {
-      if (x.anyNull || y.anyNull || x.q.length != y.q.length) null
-      else {
-        // EXACTLY the column form's arithmetic shape (see the ub
-        // Column in bucketLocalThresholdPairs): ((Q + 0.5·(sa_a+sa_b))
-        // + 0.25·d), scaled by s_a·s_b, over n_a·n_b, plus 1e-6
-        var q = 0L
-        var i = 0
-        val d = x.q.length
-        while (i < d) { q += x.q(i).toLong * y.q(i).toLong; i += 1 }
-        val ub = x.s * y.s *
-          (q.toDouble + 0.5 * (x.sa + y.sa).toDouble + 0.25 * d.toDouble) /
-          (x.n * y.n) + 1e-6
-        // Spark's `>` on doubles is NaN-safe: NaN orders above all
-        if (ub > threshold || java.lang.Double.isNaN(ub))
-          (if (x.id < y.id) (x.id, y.id) else (y.id, x.id))
-        else null
-      }
-    }
-    implicit val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong)
-    tagged.mapPartitions { rows =>
-      cellStream(rows, 5, parse,
-        (a: scala.collection.mutable.ArrayBuffer[QRow],
-         b: scala.collection.mutable.ArrayBuffer[QRow], diag: Boolean) =>
-          cellPairs[QRow, (Long, Long)](a, b, diag, (x, y) => score(x, y)))
-    }.toDF("a_id", "b_id")
+    survivorPairs[QRow](
+      cellSorted(qbanded, maxBucketRows,
+        Seq("vec_id", "qv", "__s", "__n", "__sa")),
+      parse, (x, y) =>
+        if (x.anyNull || y.anyNull || x.q.length != y.q.length) null
+        else {
+          // EXACTLY the join form's arithmetic shape (the ub Column in
+          // prunedPairsJoin): ((Q + 0.5·(sa_a+sa_b)) + 0.25·d), scaled
+          // by s_a·s_b, over n_a·n_b, plus 1e-6
+          var q = 0L
+          var i = 0
+          val d = x.q.length
+          while (i < d) { q += x.q(i).toLong * y.q(i).toLong; i += 1 }
+          val ub = x.s * y.s *
+            (q.toDouble + 0.5 * (x.sa + y.sa).toDouble + 0.25 * d.toDouble) /
+            (x.n * y.n) + 1e-6
+          // Spark's `>` on doubles is NaN-safe: NaN orders above all
+          if (ub > threshold || java.lang.Double.isNaN(ub))
+            orderedPair(x.id, y.id)
+          else null
+        })
   }
 
   /** The pair-JOIN form of the quantized prune — kept for non-bigint
@@ -937,31 +910,16 @@ object Similarity {
   private[graft] def prunedPairsJoin(
       qbanded: DataFrame,
       threshold: Double,
-      maxBucketRows: Int,
-      nParts: Int): DataFrame = {
-    val withSub = withSubBlocks(qbanded, maxBucketRows,
-      Seq("vec_id", "qv", "__s", "__n", "__sa"))
-    val left = withSub
-      .withColumn("__j", explode(sequence(col("__u"), col("__g") - 1)))
-      .withColumnRenamed("__u", "__i").drop("__g")
-    val right = withSub
-      .withColumn("__i", explode(sequence(lit(0L), col("__u"))))
-      .withColumnRenamed("__u", "__j").drop("__g")
-    val cellCols = Seq(col("tbl"), col("bkt"), col("__i"), col("__j"))
-    val a = left.repartition(nParts, cellCols: _*).alias("a")
-    val b = right.repartition(nParts, cellCols: _*).alias("b")
-    val onceOnly = (col("a.__i") =!= col("a.__j")) ||
-      (col("a.vec_id") < col("b.vec_id"))
-    // rigorous upper bound on CosineSim(a.v, b.v) — see scaladoc
+      maxBucketRows: Int): DataFrame = {
+    // rigorous upper bound on CosineSim(a.v, b.v) — see
+    // bucketLocalThresholdPairs' scaladoc
     val ub = (col("a.__s") * col("b.__s") *
         (byteDot(col("a.qv"), col("b.qv")).cast("double") +
           lit(0.5) * (col("a.__sa") + col("b.__sa")).cast("double") +
           lit(0.25) * size(col("a.qv")).cast("double"))) /
       (col("a.__n") * col("b.__n")) + lit(1e-6)
-    a.join(b,
-        col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
-          col("a.__i") === col("b.__i") && col("a.__j") === col("b.__j") &&
-          onceOnly)
+    tiledJoin(withSubBlocks(qbanded, maxBucketRows,
+        Seq("vec_id", "qv", "__s", "__n", "__sa")))
       .filter(ub > threshold)
       .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
         greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"))
@@ -970,7 +928,7 @@ object Similarity {
   /** THRESHOLD-mode banded pair engine (r15 — guide §2.3 "shuffle
     * keys and metadata instead of payloads", §8): same multi-table
     * hyperplane buckets, triangle tiling and hot-bucket guard as
-    * [[bucketLocalScoredPairs]], but the band rows carry an
+    * [[knnGraphBucketed]], but the band rows carry an
     * int8-QUANTIZED payload instead of the float vector — per row,
     * `qv` (one byte per dim), the per-row symmetric scale
     * `__s = max|x|/127`, the exact L2 norm `__n` and the code mass
@@ -1049,19 +1007,18 @@ object Similarity {
           (acc, x) => acc + abs(x.cast("long"))).as("__sa"),
         col("pos").as("tbl"), col("col").as("bkt"))
       .cache()
-    // eager materialization (one count): same concurrent-stage race as
-    // bucketLocalScoredPairs — and this one pass also populates vc,
+    // eager materialization (one count): the concurrent-stage race
+    // described on liveBanded — and this one pass also populates vc,
     // which the re-rank joins then read from cache
     qbanded.count()
     retireBandedCaches(Seq(vc, qbanded))
-    // the quantized prune: partition scorer for bigint ids (every
-    // production caller), pair-join form otherwise + as the test-side
-    // equality oracle (see the r15 PARTITION SCORER block)
+    // the quantized prune: the quantized survivor cell scorer for
+    // bigint ids (every production caller), pair-join form otherwise +
+    // as the test-side equality oracle (see the CELL SCORER block)
     val pruned =
-      (if (qbanded.schema("vec_id").dataType ==
-          org.apache.spark.sql.types.LongType)
+      (if (qbanded.schema("vec_id").dataType == LongType)
         prunedPairsPartition(qbanded, threshold, maxBucketRows)
-      else prunedPairsJoin(qbanded, threshold, maxBucketRows, nParts))
+      else prunedPairsJoin(qbanded, threshold, maxBucketRows))
       .distinct()
     // ---- exact re-rank on the survivors only: fetch the original
     // vectors by id and score with CosineSim — the sims (and the final
@@ -1076,15 +1033,13 @@ object Similarity {
         cosine(col("__va"), col("__vb")).as("sim"))
   }
 
-  /** Symmetrize scored undirected pairs and take the per-node top-k:
-    * each pair's cosine is computed ONCE and exploded into both
-    * directions in the same pass (a two-branch union would evaluate
-    * the whole scoring subtree — joins + cosine — twice), then the
-    * bounded-heap aggregate keeps k rows per node with map-side
-    * partials. Shared by the in-memory, layout-probe, and
-    * incremental graph paths. */
-  private[graft] def symTopK(scored: DataFrame, k: Int,
-      dedupIds: Boolean = false): DataFrame =
+  /** Scored undirected pairs (a_id, b_id, sim) as directed edges
+    * (vec_id, nbr_id, sim), both directions: each pair's row is
+    * exploded into both in ONE projection — a two-branch union would
+    * evaluate the whole scoring subtree (joins + cosine) twice.
+    * Shared by [[symTopK]] and the streaming graph fold's cross-batch
+    * edges ([[graft.streaming.Streams.incrementalKnnGraph]]). */
+  private[graft] def symmetrize(scored: DataFrame): DataFrame =
     scored
       .select(explode(array(
         struct(col("a_id").as("vec_id"), col("b_id").as("nbr_id"),
@@ -1092,8 +1047,15 @@ object Similarity {
         struct(col("b_id").as("vec_id"), col("a_id").as("nbr_id"),
           col("sim")))).as("e"))
       .select(col("e.vec_id"), col("e.nbr_id"), col("e.sim"))
+
+  /** Symmetrize scored undirected pairs ([[symmetrize]]) and take the
+    * per-node top-k with the bounded-heap aggregate (k rows per node,
+    * map-side partials). Serves the candidate-join oracle and the
+    * layout-probe graph. */
+  private[graft] def symTopK(scored: DataFrame, k: Int): DataFrame =
+    symmetrize(scored)
       .groupBy(col("vec_id"))
-      .agg(topKAgg(col("sim"), col("nbr_id"), k, dedupIds).as("top"))
+      .agg(topKAgg(col("sim"), col("nbr_id"), k).as("top"))
       .select(col("vec_id"), posexplode(col("top")))
       .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("nbr_id"), col("col.score").as("sim"))
@@ -1255,7 +1217,7 @@ object Similarity {
     * `numTables` separate [[hyperplaneBucket]] columns at seeds
     * `seed + 7919·t`, but the multi-table band builders stop inlining
     * 48 dot-product sub-trees into one giant projection method that
-    * the JIT refuses to compile (R15QProbe: ~120 CPU-s → ~0.3 CPU-s
+    * the JIT refuses to compile (OPTIMIZATION_r15.md: ~120 CPU-s → ~0.3 CPU-s
     * per band build at sf1.0). */
   private[graft] def hyperplaneBuckets(vec: Column, numTables: Int,
       planesPerTable: Int, dim: Int, seed: Long): Column = {
@@ -1765,7 +1727,7 @@ object Similarity {
       // at LOWER cost than the 0.861 cb=32/cm=32 pick: finer books
       // shrink the re-rank's wasted candidates, and the ADC table is
       // still only numSub×64 doubles per broadcast query row) —
-      // R12RecallSweep table in BENCH_FULL.md; the >= 0.9 floor is
+      // recall-sweep table in BENCH_FULL.md; the >= 0.9 floor is
       // spec-pinned. Memory: codebooks are numSub×codebookK×subDim
       // doubles (4 KB here) broadcast once — no scale concern.
       codebookK: Int = 64,
@@ -1905,7 +1867,7 @@ object Similarity {
       // round-13 MEASURED production default — the round-12 sweep's
       // own frontier (recall@5 0.928 at LOWER cost than nprobe=8's
       // 0.867: fewer re-rank misses outweigh the extra cell scans at
-      // this cell count) — R12RecallSweep table in BENCH_FULL.md;
+      // this cell count) — recall-sweep table in BENCH_FULL.md;
       // >= 0.9 spec-pinned. At this DEFAULT cell count a full probe
       // degenerates IVF's coarse prune into per-cell-codebook PQ,
       // which is exactly what the measurement says to do at 10
@@ -2156,7 +2118,7 @@ object Similarity {
     * the geometry where the coarse prune starts paying (cells must
     * outnumber probes). `replicateMargin` (default 0.1 cosine)
     * controls boundary replication — see the assignment comment
-    * below; R14IvfPqProbe on the 20k fresh corpus measured
+    * below; BENCH_FULL.md (20k fresh corpus) records
     * nprobe/numCells = 0.25 → recall 0.747 unreplicated vs 0.935 at
     * margin 0.1 (storage ×2.84 on that worst-case near-uniform
     * fixture; clusterable corpora replicate less because fewer cells

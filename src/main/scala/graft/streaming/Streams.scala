@@ -989,48 +989,34 @@ object Streams {
           col("e.score").as("sim"))
   }
 
-  /** p15: incremental k-NN GRAPH maintenance — s16's corpus-wide
-    * neighbor graph folded at ingest: each micro-batch's vectors are
-    * hyperplane-banded once, probed against the ACCUMULATED band
-    * table for cross-batch candidate pairs (bucket-bounded
-    * equi-join) and self-joined within the batch, each new pair is
-    * scored ONCE (codegen cosine against the accumulated vector
-    * state), symmetrized, and appended as edges. A pair is
-    * discovered exactly when its later member arrives, and the
-    * per-node prune ([[graphFold]]) is a commutative monoid under
-    * merge-and-truncate, so the maintained graph EQUALS the batch
-    * [[graft.operators.Similarity.knnGraphBucketed]] under ANY
-    * chunking — new data refines existing nodes' neighbor lists
-    * without ever rescoring old pairs.
+  /** The banded vector fold shared by p15 ([[incrementalKnnGraph]])
+    * and p17 ([[incrementalEmbPairs]]). Each micro-batch's vectors
+    * are hyperplane-banded once, scored within the batch, probed
+    * against the ACCUMULATED band table for cross-batch candidate
+    * pairs, and the fold's combined rows are appended to `out`.
     *
-    * State, every per-batch write O(batch):
+    * State besides `out`, every per-batch write O(batch):
     *   - bands: ONE bucketed table on the `(tbl, bkt)` probe key
     *     ([[BandState]], appended; zero index-side exchange in the
     *     cross-probe, plan-asserted);
-    *   - vecs: [[LsmState]] parts (the batch's vectors);
-    *   - graph: [[LsmState]] parts carrying the batch's new
-    *     symmetrized edges; compaction folds them into the pruned
-    *     per-node lists 1/compactEvery of the time.
+    *   - vecs: [[LsmState]] parts (the batch's vectors; identity fold,
+    *     one row per vec_id, delivered once — the _folded manifest
+    *     covers compaction crashes).
     *
-    * `keepThreshold` retains all edges above the threshold alongside
-    * the top-k (see [[graphFold]]) — the dedup-serving variant p18
-    * reads ([[streamingGraphClusterDedup]]). */
-  def incrementalKnnGraph(
-      stream: DataFrame,
-      base: String,
-      k: Int = 5,
-      numTables: Int = 12,
-      planesPerTable: Int = 4,
-      dim: Int = 64,
-      seed: Long = 42L,
-      keepThreshold: Option[Double] = None,
-      compactEvery: Int = 8): DataFrame = {
+    * A fold supplies only its own three parts: `within` scores the
+    * batch's vector-carrying band rows ([[graft.operators.Similarity
+    * .bandedWithVecs]]); `combine` turns that output plus the scored
+    * cross-batch pairs (a_id, b_id, sim) — absent on the first batch
+    * — into the rows appended to `out`; the caller reads `out` back
+    * once the query has drained. */
+  private def runBandedFold(
+      stream: DataFrame, base: String, name: String, out: LsmState,
+      numTables: Int, planesPerTable: Int, dim: Int, seed: Long,
+      compactEvery: Int)(
+      within: DataFrame => DataFrame,
+      combine: (DataFrame, Option[DataFrame]) => DataFrame): Unit = {
     val spark = stream.sparkSession
-    // vecs: identity fold (one row per vec_id, delivered once; the
-    // _folded manifest covers compaction crashes)
     val vecsSt = new LsmState(spark, s"$base/vecs", identity, compactEvery)
-    val graphSt = new LsmState(
-      spark, s"$base/graph", graphFold(k, keepThreshold), compactEvery)
     val bands = new BandState(spark, base, Seq("tbl", "bkt"))
     val q = stream.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -1059,26 +1045,17 @@ object Streams {
           seed, spread = false).cache()
         // eager materialization: the scoring plan reads bandedV from
         // several concurrent stages; a lazy cache lets each recompute
-        // the projection pass before any commits it (same race as
-        // bucketLocalScoredPairs, measured there)
+        // the projection pass before any commits it (the race
+        // described on Similarity.liveBanded)
         bandedV.count()
         val newBands = bandedV.select(col("vec_id"), col("tbl"),
           col("bkt"))
-        // WITHIN-batch edges, pre-pruned INSIDE the scorer (r15): the
-        // fused partial scorer keeps per-node retention buffers in
-        // the Σm² cell loop — the batch's full scored pair stream is
-        // never emitted, symmetrized, or shuffled (it was the fold
-        // trigger's dominant stage: ~85 of 178 CPU-s at sf1.0).
-        // Output-identical by the fold monoid: prune(prune(W) ∪ C) =
-        // prune(W ∪ C) — graphFold's scaladoc.
-        val withinSym = graft.operators.Similarity
-          .symEdgesFromBanded(bandedV, k, keepThreshold,
-            maxBucketRows = 2048)
+        val withinOut = within(bandedV)
         // cross-batch candidates: the batch side carries its vector
         // on the band row, so only the STORED side needs a vector
         // fetch (one join against the accumulated vec state instead
-        // of the previous two). One row per shared bucket — the
-        // per-batch pre-prune below absorbs the duplicates.
+        // of two). One row per shared bucket — each fold's combine
+        // step absorbs the duplicates.
         val storedVecs = vecsSt.view(except = Some(id))
         val crossScored = bands.scan().flatMap { ob =>
           storedVecs.map { sv =>
@@ -1096,44 +1073,17 @@ object Streams {
                   .as("sim"))
           }
         }
-        // cross edges symmetrize as before (explode both directions
-        // from the single scored row); the within-batch side arrives
-        // already symmetrized and pre-pruned from the fused scorer
-        val crossSym = crossScored.map(_
-          .select(explode(array(
-            struct(col("a_id").as("vec_id"), col("b_id").as("nbr_id"),
-              col("sim")),
-            struct(col("b_id").as("vec_id"), col("a_id").as("nbr_id"),
-              col("sim")))).as("e"))
-          .select(col("e.vec_id"), col("e.nbr_id"), col("e.sim")))
-        val sym = crossSym.map(withinSym.unionByName(_))
-          .getOrElse(withinSym)
-        // Per-batch PRE-PRUNE before the part write: the fold is a
-        // merge-and-truncate monoid (prune(prune(A) ∪ B) =
-        // prune(A ∪ B) — see graphFold), so appending the batch's
-        // pruned edges yields the same folded graph while the part
-        // shrinks from candidate-sized (every scored pair, ~Θ(Σ m²)
-        // rows per batch) to output-sized (k per touched node plus
-        // above-threshold edges). dedupEdges collapses the
-        // bucket-local stream's one-row-per-shared-table duplicates
-        // inside the same bounded heaps. BOTH fold forms are now a
-        // single aggregate pass over the scored stream (the threshold
-        // form's one-pass retention aggregate replaced the persisted
-        // three-reader plan — see graphFold), so the scoring join
-        // runs exactly once with no per-trigger candidate cache.
-        // Edge part FIRST (executes the lazy cross-probe against the
-        // pre-batch band table), then vecs, then bands.
-        graphSt.append(id,
-          graphFold(k, keepThreshold, dedupEdges = true)(sym))
-        // the edge append above executed every read of the PRE-batch
-        // band/vec state (the lazy cross-probe); the remaining two
-        // appends touch disjoint state and overlap (runParallel —
-        // the p19 trigger treatment), as do the three compactions
+        // output part FIRST (it executes the lazy cross-probe against
+        // the band/vec state as it stood BEFORE this batch); the
+        // remaining two appends touch disjoint state and overlap
+        // (runParallel — the p19 trigger treatment), as do the three
+        // compactions
+        out.append(id, combine(withinOut, crossScored))
         runParallel(Seq(
           () => vecsSt.append(id, newVecs),
           () => bands.append(id, newBands)))
         runParallel(Seq(
-          () => graphSt.maybeCompact(id),
+          () => out.maybeCompact(id),
           () => vecsSt.maybeCompact(id),
           () => bands.maybeCompact(id, compactEvery)))
         bandedV.unpersist(blocking = false)
@@ -1142,10 +1092,65 @@ object Streams {
         ()
       }
       .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p15_${java.util.UUID.randomUUID()}")
+      .queryName(s"graft_${name}_${java.util.UUID.randomUUID()}")
       .start()
     q.processAllAvailable()
     q.stop()
+  }
+
+  /** p15: incremental k-NN GRAPH maintenance — s16's corpus-wide
+    * neighbor graph folded at ingest ([[runBandedFold]]): a pair is
+    * discovered exactly when its later member arrives, each new pair
+    * is scored ONCE, symmetrized, and appended as edges, and the
+    * per-node prune ([[graphFold]]) is a commutative monoid under
+    * merge-and-truncate, so the maintained graph EQUALS the batch
+    * [[graft.operators.Similarity.knnGraphBucketed]] under ANY
+    * chunking — new data refines existing nodes' neighbor lists
+    * without ever rescoring old pairs. The graph state is
+    * [[LsmState]] parts carrying each batch's pre-pruned edges;
+    * compaction folds them into the pruned per-node lists
+    * 1/compactEvery of the time.
+    *
+    * Ids follow the batch graph's rule
+    * ([[graft.operators.Similarity.integralIdType]]): a non-integral
+    * `vec_id` is rejected before the query starts.
+    *
+    * `keepThreshold` retains all edges above the threshold alongside
+    * the top-k (see [[graphFold]]) — the dedup-serving variant p18
+    * reads ([[streamingGraphClusterDedup]]). */
+  def incrementalKnnGraph(
+      stream: DataFrame,
+      base: String,
+      k: Int = 5,
+      numTables: Int = 12,
+      planesPerTable: Int = 4,
+      dim: Int = 64,
+      seed: Long = 42L,
+      keepThreshold: Option[Double] = None,
+      compactEvery: Int = 8): DataFrame = {
+    graft.operators.Similarity.integralIdType(stream.schema, "vec_id")
+    val graphSt = new LsmState(stream.sparkSession, s"$base/graph",
+      graphFold(k, keepThreshold), compactEvery)
+    runBandedFold(stream, base, "p15", graphSt, numTables, planesPerTable,
+        dim, seed, compactEvery)(
+      // WITHIN-batch edges, pre-pruned INSIDE the retention cell
+      // scorer: the batch's full scored pair stream is never emitted,
+      // symmetrized, or shuffled (it was the fold trigger's dominant
+      // stage: ~85 of 178 CPU-s at sf1.0). Output-identical by the
+      // fold monoid: prune(prune(W) ∪ C) = prune(W ∪ C).
+      bandedV => graft.operators.Similarity
+        .symEdgesFromBanded(bandedV, k, keepThreshold, maxBucketRows = 2048),
+      // cross edges symmetrize from the single scored row; then the
+      // per-batch PRE-PRUNE before the part write: appending the
+      // batch's pruned edges yields the same folded graph (the monoid
+      // again) while the part shrinks from candidate-sized to
+      // output-sized (k per touched node plus above-threshold edges).
+      // dedupEdges collapses the one-row-per-shared-table duplicates
+      // inside the same bounded heaps, and the single aggregate pass
+      // runs the scoring join exactly once with no candidate cache.
+      (withinSym, cross) => graphFold(k, keepThreshold, dedupEdges = true)(
+        cross.map(c => withinSym.unionByName(
+          graft.operators.Similarity.symmetrize(c))).getOrElse(withinSym)))
     val w = Window.partitionBy("vec_id")
       .orderBy(col("sim").desc, col("nbr_id"))
     graphSt.result()
@@ -1233,25 +1238,21 @@ object Streams {
 
   /** p17: incremental embedding near-dup PAIR discovery — the
     * expensive half of d11's SemDeDup-shape cluster dedup maintained
-    * at ingest: per batch, vectors hyperplane-banded once, probed
-    * against the ACCUMULATED band table (bucket-bounded equi-join) +
-    * within-batch self-join, each NEW candidate pair cosine-scored
-    * once against the accumulated vector snapshot, survivors above
-    * the threshold appended to the stored pair set. A pair is
-    * discovered exactly when its later member arrives (p14's
-    * argument), so the accumulated thresholded pairs equal the batch
+    * at ingest ([[runBandedFold]]): each NEW candidate pair is
+    * cosine-scored once against the accumulated vector snapshot and
+    * the survivors above the threshold are appended to the stored
+    * pair set. A pair is discovered exactly when its later member
+    * arrives (p14's argument), so the accumulated thresholded pairs
+    * equal the batch
     * [[graft.operators.Dedup.embeddingNearDupPairsBucketed]] set
     * under ANY chunking. Clustering itself is a GLOBAL property (one
     * new edge can merge two existing clusters), so labels cannot
     * fold incrementally — the CC fixpoint runs at read time over the
     * accumulated LSH-pruned pair set ([[streamingClusterDedup]]);
-    * what never re-runs is the corpus-sized hashing + scoring.
-    *
-    * State, every per-batch write O(batch): bands ([[BandState]],
-    * appended bucketed table on the `(tbl, bkt)` probe key — zero
-    * index-side exchange in the cross-probe), vecs and pairs
-    * ([[LsmState]] parts; pairs are discovered exactly once, so the
-    * fold's distinct only covers crash windows). */
+    * what never re-runs is the corpus-sized hashing + scoring. The
+    * pairs are [[LsmState]] parts (identity fold: pairs are
+    * discovered exactly once, so the fold's distinct only covers
+    * crash windows). */
   def incrementalEmbPairs(
       stream: DataFrame,
       base: String,
@@ -1261,99 +1262,23 @@ object Streams {
       dim: Int = 64,
       seed: Long = 42L,
       compactEvery: Int = 8): DataFrame = {
-    val spark = stream.sparkSession
-    // identity folds on both (vecs delivered once; pairs discovered
-    // once + per-batch distinct; _folded manifest covers crashes)
-    val vecsSt = new LsmState(spark, s"$base/vecs", identity, compactEvery)
-    val pairsSt = new LsmState(spark, s"$base/pairs", identity, compactEvery)
-    val bands = new BandState(spark, base, Seq("tbl", "bkt"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // cache BEFORE the sizing count (see the p15 fold): one
-        // source read shared by sizing and processing
-        val raw = batch.toDF().cache()
-        try {
-        val bs = raw.sparkSession
-        val parts = quadraticParts(bs, raw.count(), numTables,
-          planesPerTable)
-        withStreamPartitions(bs, parts) {
-        val b = spread(raw)
-        val newVecs = b.select(col("vec_id"), col("embedding").as("v"))
-        // cache (lazy): within scoring (both tile sides), cross
-        // probe, and band append all read this frame — uncached, the
-        // batch pays its hyperplane projections 4x. Vectors ride the
-        // band rows: WITHIN-batch candidates score bucket-locally
-        // (no exchange carries a candidate pair), the id-only band
-        // rows for the stored layout flow from the same cache, and
-        // the cross probe fetches only the STORED side's vector (one
-        // join instead of the previous two).
-        val bandedV = graft.operators.Similarity.bandedWithVecs(
-          b, "vec_id", "embedding", numTables, planesPerTable, dim,
-          seed, spread = false).cache()
-        // eager materialization: the scoring plan reads bandedV from
-        // several concurrent stages; a lazy cache lets each recompute
-        // the projection pass before any commits it (same race as
-        // bucketLocalScoredPairs, measured there)
-        bandedV.count()
-        val newBands = bandedV.select(col("vec_id"), col("tbl"),
-          col("bkt"))
-        // WITHIN-batch survivors, filtered INSIDE the scorer (r15):
-        // only (a_id, b_id) above the threshold leave the cell loop —
-        // the batch's scored pair stream is never emitted (same
-        // output: the filter below distributes over the union)
-        val withinSurv = graft.operators.Similarity
-          .thresholdSurvivorsFromBanded(bandedV, threshold,
-            maxBucketRows = 2048)
-        val storedVecs = vecsSt.view(except = Some(id))
-        val crossScored = bands.scan().flatMap { ob =>
-          storedVecs.map { sv =>
-            bandedV.alias("n").join(ob.alias("o"),
-                col("n.tbl") === col("o.tbl") &&
-                  col("n.bkt") === col("o.bkt") &&
-                  col("n.vec_id") =!= col("o.vec_id"))
-              .select(least(col("n.vec_id"), col("o.vec_id")).as("a_id"),
-                greatest(col("n.vec_id"), col("o.vec_id")).as("b_id"),
-                col("n.v").as("nv"), col("o.vec_id").as("o_id"))
-              .join(sv.select(col("vec_id").as("o_id"),
-                col("v").as("ov")), "o_id")
-              .select(col("a_id"), col("b_id"),
-                graft.operators.Similarity.cosine(col("nv"), col("ov"))
-                  .as("sim"))
-          }
-        }
-        // threshold FIRST, dedup after: the filter runs inside the
-        // scoring loop (within-batch) / stage (cross), so the
-        // distinct that absorbs the one-row-per-shared-table
-        // duplicates is OUTPUT-sized — the previous shape deduped the
-        // full candidate id-pair set before it ever scored a row
-        val crossSurv = crossScored.map(_
-          .filter(col("sim") > threshold)
-          .select(col("a_id"), col("b_id")))
-        val survivors = crossSurv.map(withinSurv.unionByName(_))
-          .getOrElse(withinSurv)
-          .distinct()
-        // pairs part FIRST (executes the lazy cross-probe against the
-        // pre-batch band table); the remaining two appends touch
-        // disjoint state and overlap, as do the compactions
-        // (runParallel — the p19 trigger treatment)
-        pairsSt.append(id, survivors)
-        runParallel(Seq(
-          () => vecsSt.append(id, newVecs),
-          () => bands.append(id, newBands)))
-        runParallel(Seq(
-          () => pairsSt.maybeCompact(id),
-          () => vecsSt.maybeCompact(id),
-          () => bands.maybeCompact(id, compactEvery)))
-        bandedV.unpersist(blocking = false)
-        }
-        } finally raw.unpersist(blocking = false)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p17_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val pairsSt = new LsmState(stream.sparkSession, s"$base/pairs",
+      identity, compactEvery)
+    runBandedFold(stream, base, "p17", pairsSt, numTables, planesPerTable,
+        dim, seed, compactEvery)(
+      // WITHIN-batch survivors, filtered INSIDE the float survivor
+      // cell scorer: only (a_id, b_id) above the threshold leave the
+      // cell loop (same output: the filter distributes over the union)
+      bandedV => graft.operators.Similarity
+        .thresholdSurvivorsFromBanded(bandedV, threshold, maxBucketRows = 2048),
+      // threshold FIRST, dedup after: the filter runs inside the
+      // scoring loop (within-batch) / stage (cross), so the distinct
+      // that absorbs the one-row-per-shared-table duplicates is
+      // OUTPUT-sized
+      (withinSurv, cross) => cross.map(c => withinSurv.unionByName(
+          c.filter(col("sim") > threshold).select(col("a_id"), col("b_id"))))
+        .getOrElse(withinSurv)
+        .distinct())
     pairsSt.result()
   }
 

@@ -7,8 +7,8 @@ import graft.functions.{Normalize, TextFns}
   * an exact drop-in for a built-in composition, so each spec runs the
   * NEW expression and the OLD composition side by side over
   * adversarial + randomized input and requires zero divergent rows.
-  * (R12Probe repeats the same zero-divergence check over the full
-  * sf1.0 tables.) */
+  * (BENCH_FULL.md records the same zero-divergence check over the
+  * full sf1.0 tables.) */
 class PlansSpec extends SparkSuite {
   import spark.implicits._
 

@@ -391,6 +391,50 @@ class SimilaritySpec extends SparkSuite {
         emb, "vec_id", "embedding", k = 5)) == oracle,
         "flushed partial heaps must merge to the same graph")
     } finally Similarity.FlushHeapNodes = oldFlush
+    // int ids are scored as bigint: the same graph, vec_id still int
+    val intGraph = Similarity.knnGraphBucketed(
+      emb.withColumn("vec_id", col("vec_id").cast("int")),
+      "vec_id", "embedding", k = 5)
+    assert(intGraph.schema("vec_id").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(rows(intGraph.withColumn("vec_id", col("vec_id").cast("long"))) ==
+      oracle, "int-id graph must equal the bigint graph")
+  }
+
+  test("knn graph rejects non-integral ids up front") {
+    val strEmb = emb.withColumn("vec_id", concat(lit("id_"), col("vec_id")))
+    val e = intercept[IllegalArgumentException](
+      Similarity.knnGraphBucketed(strEmb, "vec_id", "embedding", k = 5))
+    assert(e.getMessage.contains("`vec_id`") && e.getMessage.contains("string"),
+      e.getMessage)
+  }
+
+  test("retention scorer emits each flushed heap generation before " +
+      "its input is exhausted") {
+    import org.apache.spark.sql.Row
+    // cell-sorted (vec_id, v, __n, tbl, bkt, __i, __j, __sd) rows: ten
+    // single-cell buckets of three vectors each, so every cell adds
+    // three fresh nodes to the live heaps
+    val input = for (bkt <- 0 until 10; m <- 0 until 3) yield {
+      val v = Seq(1f, m.toFloat, bkt.toFloat)
+      Row((bkt * 3 + m).toLong, v,
+        math.sqrt(v.map(x => x.toDouble * x).sum), 0, bkt, 0, 0, 0)
+    }
+    def partials(flushAt: Int, counted: Iterator[Row]) =
+      Similarity.retentionPartition(counted, k = 2, None, flushAt)
+    val oldFlush = Similarity.FlushHeapNodes
+    try {
+      Similarity.FlushHeapNodes = 4
+      var consumed = 0
+      val out = partials(Similarity.FlushHeapNodes,
+        input.iterator.map { r => consumed += 1; r })
+      assert(out.hasNext)
+      assert(consumed < input.length,
+        s"first partial only after all $consumed input rows were read")
+      // no node spans two cells here, so the generations together
+      // are exactly the unflushed partials
+      assert(out.toSet == partials(Int.MaxValue, input.iterator).toSet)
+    } finally Similarity.FlushHeapNodes = oldFlush
   }
 
   test("knn graph: ranks well-formed, sims exact, top-1 recall vs brute") {
@@ -513,7 +557,7 @@ class SimilaritySpec extends SparkSuite {
     val recall = (pq intersect brute).size.toDouble / brute.size
     info(s"PQ recall@5 (8 subspaces x 32 codes, candMult=32) = $recall")
     // floor raised 0.6 -> 0.85 with the round-12 tuned default
-    // (candMult=32; R12RecallSweep: 0.861 on the sf0.1 corpus)
+    // (candMult=32; BENCH_FULL.md recall sweep: 0.861 on the sf0.1 corpus)
     assert(recall >= 0.85, s"PQ recall too low: $recall")
   }
 

@@ -350,6 +350,25 @@ class StreamsSpec extends SparkSuite {
     assert(parts.length > 1, s"expected multiple batch parts: ${parts.toSeq}")
   }
 
+  test("incremental knn graph rejects non-integral ids before the " +
+      "query starts") {
+    val schema = Tables.load(spark, sfDir, "embeddings")
+      .select(concat(lit("id_"), col("vec_id")).as("vec_id"),
+        col("embedding"))
+      .schema
+    val srcDir = java.nio.file.Files
+      .createTempDirectory("graft_p15_str_src").toString
+    val stream = spark.readStream.schema(schema).parquet(srcDir)
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_p15_str_spec").toString
+    val e = intercept[IllegalArgumentException](graft.streaming.Streams
+      .incrementalKnnGraph(stream, base, k = 5, keepThreshold = Some(0.3)))
+    assert(e.getMessage.contains("`vec_id`") && e.getMessage.contains("string"),
+      e.getMessage)
+    // nothing was started or written: no checkpoint, no state
+    assert(new java.io.File(base).list().isEmpty)
+  }
+
   test("incremental knn graph: multi-batch fold equals batch s16 graph") {
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
