@@ -44,7 +44,8 @@ object Layouts {
     * manifest props — the hook for write-derived lineage (e.g. the
     * IVF-PQ quantization-error baseline) that would otherwise need a
     * second manifest rewrite, which is a full collect+overwrite of
-    * the manifest table per call. */
+    * the manifest table per call. Returns the written table's row
+    * count (the manifest's `n_rows`). */
   def publish(
       df: DataFrame,
       table: String,
@@ -53,7 +54,7 @@ object Layouts {
       numBuckets: Int,
       sortCols: Seq[String] = Nil,
       props: Map[String, String] = Map.empty,
-      propsOf: DataFrame => Map[String, String] = _ => Map.empty): Unit = {
+      propsOf: DataFrame => Map[String, String] = _ => Map.empty): Long = {
     require(bucketCols.nonEmpty, "a layout needs at least one bucket column")
     val spark = df.sparkSession
     ensureWritable(spark, table)
@@ -71,6 +72,7 @@ object Layouts {
       spark, tableLocation(spark, table))
     recordManifest(spark, table, kind, bucketCols, numBuckets,
       nRows, props ++ propsOf(written))
+    nRows
   }
 
   /** Filesystem location of a managed table (the warehouse dir path

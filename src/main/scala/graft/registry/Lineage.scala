@@ -63,8 +63,11 @@ object Lineage {
       publishDir: String,
       tables: Seq[String],
       snapshotDate: String): Unit = {
+    // row counts from parquet footers: a driver-side metadata read,
+    // not an inference job plus a count job per table
     val counts = tables.map { t =>
-      val n = spark.read.parquet(s"$publishDir/$t.parquet").count()
+      val n = graft.operators.ExactDistinct
+        .parquetRowCount(spark, s"$publishDir/$t.parquet")
       s""""$t": $n"""
     }.mkString(", ")
     // ONE distributed hash pass over the published files; both the

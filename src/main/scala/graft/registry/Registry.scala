@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Normalize
-import graft.operators.Relational
+import graft.operators.{ExactDistinct, Relational}
 
 /** The user-facing registry API — Spark re-expression of the
   * reference's publish stage (pipelines/publish.py) and Python API
@@ -27,6 +27,15 @@ import graft.operators.Relational
   * analog is a token inverted index (explode + hash shuffle) — both
   * forms that scale out, where the reference's single-file databases
   * cannot.
+  *
+  * Read rule: a registry call launches only the Spark jobs its query
+  * needs. Base tables are read with their declared schemas
+  * ([[Schemas.byTable]], exactly what normalize writes), so building a
+  * DataFrame runs no parquet schema-inference job; row counts
+  * (`status`, `freshnessReport`, the FTS `doc_count`) are summed from
+  * parquet footers on the driver. Nothing is memoized: every call lists
+  * the table directory afresh, so a re-publish into the same dir is
+  * seen by a live `Registry`.
   */
 class Registry(
     spark: SparkSession,
@@ -58,8 +67,33 @@ class Registry(
         "Run the update pipeline (Ingest.fromZip / normalize) to refresh.")
     }
 
-  def table(name: String): DataFrame =
-    spark.read.parquet(s"$dataDir/$name.parquet")
+  /** A base table read with its declared schema; names outside
+    * [[Schemas.byTable]] fall back to an inferred read. */
+  def table(name: String): DataFrame = {
+    val path = s"$dataDir/$name.parquet"
+    Schemas.byTable.get(name)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** Exact row count of a base table from its parquet footers. */
+  private def rowCount(name: String): Long =
+    ExactDistinct.parquetRowCount(spark, s"$dataDir/$name.parquet")
+
+  /** Saved-table name of this data dir's materialized FTS index:
+    * `graft_owners_fts_` + the first 16 hex chars of SHA-256 of the
+    * fully qualified dir (the [[graft.streaming.BandState.tableName]]
+    * pattern), so a registry over one snapshot never probes another
+    * snapshot's index in the same session, and every spelling of one
+    * dir (relative, `./`, doubled or trailing slashes, absolute) names
+    * the same index. */
+  val ftsTable: String = {
+    val p = new org.apache.hadoop.fs.Path(dataDir)
+    val qualified = p.getFileSystem(spark.sessionState.newHadoopConf())
+      .makeQualified(p).toString
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(qualified.getBytes("UTF-8"))
+    s"graft_owners_fts_${digest.take(8).map("%02x".format(_)).mkString}"
+  }
 
   /** Freshness + integrity report — `status --watch`'s one decision
     * table, folding [[Lineage]]'s manifest into the live registry:
@@ -68,9 +102,9 @@ class Registry(
     * pipeline), the snapshot age, and the same 30-day staleness
     * verdict [[warnIfStale]] applies at query time (api.py:81-94).
     * The manifest is one small driver-side JSON read; live counts
-    * are parquet metadata passes. Missing manifest → manifest_rows
-    * -1 / age -1, so the report itself flags an unpublished dir
-    * instead of throwing. */
+    * are parquet footer sums (no Spark job). Missing manifest →
+    * manifest_rows -1 / age -1, so the report itself flags an
+    * unpublished dir instead of throwing. */
   def freshnessReport(
       asOf: java.time.LocalDate = java.time.LocalDate.now): DataFrame = {
     import spark.implicits._
@@ -90,7 +124,7 @@ class Registry(
         (a, c)
       }
     tableNames.map { t =>
-      val live = table(t).count()
+      val live = rowCount(t)
       val man = counts.getOrElse(t, -1L)
       (t, live, man, if (man == live) 1L else 0L,
         age.getOrElse(-1L), if (age.exists(_ >= 30)) 1L else 0L)
@@ -237,16 +271,17 @@ class Registry(
     * repeated searches then probe the written layout — bucket pruning
     * reads 1/numBuckets of the index per term, no re-explode of the
     * owners table per call. At 100 TB the explode+shuffle is paid
-    * once per snapshot publish instead of once per search. */
+    * once per snapshot publish instead of once per search. Returns
+    * the index's row count. */
   def writeFtsIndex(
-      tableName: String = Registry.FtsTable, numBuckets: Int = 32): Unit =
+      tableName: String = ftsTable, numBuckets: Int = 32): Long =
     graft.operators.Layouts.publish(
       ownersFtsIndex, tableName, "fts_index", Seq("token"), numBuckets,
       // the ranked probe's idf needs the corpus doc count N; carrying
       // it on the layout's lineage row saves one owners-count job per
       // ranked search (it is a property of the INDEXED snapshot, so
       // the manifest — not the live table — is its correct home)
-      props = Map("doc_count" -> table("owners").count().toString))
+      props = Map("doc_count" -> rowCount("owners").toString))
 
   /** All-terms FTS match (AND semantics like FTS5 default): one
     * semi-join per term against the inverted index — the written
@@ -256,7 +291,7 @@ class Registry(
       terms: Seq[String], indexTable: Option[String] = None): DataFrame = {
     require(terms.nonEmpty, "searchOwnersFts needs at least one term")
     val written = indexTable.orElse(
-      Some(Registry.FtsTable).filter(spark.catalog.tableExists))
+      Some(ftsTable).filter(spark.catalog.tableExists))
     // Point probes need the bucketed scan kept: the planner's
     // DisableUnnecessaryBucketedScan rule only credits exchange
     // elimination (joins/aggs on the bucket key), not bucket PRUNING,
@@ -290,7 +325,7 @@ class Registry(
     require(terms.nonEmpty, "searchOwnersFtsRanked needs at least one term")
     val up = terms.map(_.toUpperCase).distinct
     val written = indexTable.orElse(
-      Some(Registry.FtsTable).filter(spark.catalog.tableExists))
+      Some(ftsTable).filter(spark.catalog.tableExists))
     // A persisted index written by a pre-`tf` index-fts run lacks the
     // term-frequency column the ranking needs; falling back to the
     // lazy index keeps ranked search working (at recompute cost)
@@ -324,12 +359,13 @@ class Registry(
       .orderBy(col("score").desc, col("owner_id"))
   }
 
-  /** Data status / metadata (api.py:338-376). */
-  def status: DataFrame =
-    tableNames.map(n =>
-      table(n).agg(count(lit(1)).as("n_rows"))
-        .select(lit(n).as("table_name"), col("n_rows")))
-      .reduce(_ unionAll _)
+  /** Data status / metadata (api.py:338-376): per-table row counts
+    * from parquet footers, as a local relation (collecting it runs no
+    * job). */
+  def status: DataFrame = {
+    import spark.implicits._
+    tableNames.map(n => (n, rowCount(n))).toDF("table_name", "n_rows")
+  }
 
   def listTables: Seq[String] =
     tableNames ++ Seq("aircraft_decoded", "owners_clean", "owners_summary")
@@ -348,15 +384,12 @@ class Registry(
 }
 
 object Registry {
-  /** The registry's base tables — single source of truth shared by
-    * the query layer, [[Ingest.fromZip]] manifesting and the Cli
-    * normalize path (a second literal list silently diverges the
-    * moment a table is added). */
-  val tableNames: Seq[String] = Seq("aircraft", "registrations", "owners",
-    "aircraft_make_model", "engines")
-
-  /** Default saved-table name for the materialized FTS index. */
-  val FtsTable: String = "graft_owners_fts"
+  /** The registry's base tables, in publish order — the key set of
+    * [[Schemas.byTable]], shared by the query layer,
+    * [[Ingest.fromZip]] manifesting and the Cli normalize path (a
+    * second literal list silently diverges the moment a table is
+    * added). */
+  val tableNames: Seq[String] = Schemas.byTable.keys.toSeq
 
   /** Prefix of the staleness warning emitted by `warnIfStale` —
     * shared with Cli's `--skip-age-check` filter so rewording the

@@ -1,5 +1,7 @@
 package graft.registry
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.types._
 
 /** Typed schemas for the aircraft-registry table set — the Spark
@@ -66,6 +68,19 @@ object Schemas {
     StructField("horsepower", IntegerType),
     StructField("cylinders", IntegerType)))
 
+  /** The registry's base tables and their declared schemas, in
+    * publish order — the one list of table names
+    * ([[Registry.tableNames]] is its key set). Normalize writes exactly
+    * these schemas ([[RegistryNormalize.castTo]]), so [[Registry]]
+    * reads each table with its entry here instead of inferring it
+    * from the parquet footers. */
+  val byTable: ListMap[String, StructType] = ListMap(
+    "aircraft" -> aircraft,
+    "registrations" -> registrations,
+    "owners" -> owners,
+    "aircraft_make_model" -> aircraftMakeModel,
+    "engines" -> engines)
+
   /** Stable provenance hash of a schema (hangarbay/schemas.py:7
     * schema_hash parity): SHA-256 over a canonical per-field
     * rendering (name:type:nullable joined in declaration order),
@@ -85,12 +100,8 @@ object Schemas {
     * (schemas.py:109 get_all_schema_hashes parity) — the map a
     * publish manifest records so a reader can detect schema drift
     * without comparing full schemas. */
-  def allSchemaHashes: Map[String, String] = Map(
-    "aircraft" -> schemaHash(aircraft),
-    "registrations" -> schemaHash(registrations),
-    "owners" -> schemaHash(owners),
-    "aircraft_make_model" -> schemaHash(aircraftMakeModel),
-    "engines" -> schemaHash(engines))
+  def allSchemaHashes: Map[String, String] =
+    byTable.map { case (t, s) => t -> schemaHash(s) }
 
   /** FAA code → description lookups (public FAA registry codebook,
     * as inlined by the reference at pipelines/publish.py:75-149). */

@@ -46,6 +46,10 @@ class CliSpec extends SparkSuite {
     root
   }
 
+  // the FTS index table the CLI's registry writes and probes
+  private lazy val ftsTable =
+    new graft.registry.Registry(spark, s"$dataRoot/publish", _ => ()).ftsTable
+
   test("update unpacks the zip, normalizes, and writes the manifest") {
     val pub = s"$dataRoot/publish"
     assert(Files.exists(Paths.get(s"$dataRoot/raw/2020-01-01/MASTER.txt")))
@@ -194,32 +198,21 @@ class CliSpec extends SparkSuite {
 
   test("formatTable executes the query once (single take, no count)") {
     import spark.implicits._
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     // a shuffle-bearing query: a second execution (the old df.count()
     // prelude) would show up as extra jobs here
     val df = (1 to 50).map(i => (i % 5, i)).toDF("k", "v")
       .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("s"))
     df.collect() // warm: file listing / codegen out of the way
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Cli.formatTable(df)
-      Thread.sleep(1000) // listener bus is async; let events drain
-      // take(n) may launch 1..few jobs as it scales partitions, but a
-      // count()+take() pair doubles it; pin to the observed single pass
-      assert(jobs.get() <= 2, s"formatTable launched ${jobs.get()} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = jobsLaunchedBy { Cli.formatTable(df); () }
+    // take(n) may launch 1..few jobs as it scales partitions, but a
+    // count()+take() pair doubles it; pin to the observed single pass
+    assert(jobs <= 2, s"formatTable launched $jobs jobs")
   }
 
   test("index-fts materializes the index and fts probes it") {
     var msgs = List.empty[String]
     assert(Cli.run(spark, dataRoot, Seq("index-fts"), msgs ::= _).isEmpty)
-    assert(msgs.exists(_.contains(graft.registry.Registry.FtsTable)))
+    assert(msgs.exists(_.contains(ftsTable)))
     try {
       val df = Cli.run(spark, dataRoot,
         Seq("fts", "POLICE", "ANGELES"), _ => ()).get
@@ -231,7 +224,7 @@ class CliSpec extends SparkSuite {
       assert(Cli.run(spark, dataRoot,
         Seq("fts", "POLICE", "CHICAGO"), _ => ()).get.count() == 0)
     } finally
-      spark.sql(s"DROP TABLE IF EXISTS ${graft.registry.Registry.FtsTable}")
+      spark.sql(s"DROP TABLE IF EXISTS $ftsTable")
   }
 
   test("publish materializes the derived views and the FTS index") {
@@ -244,7 +237,7 @@ class CliSpec extends SparkSuite {
         r.getAs[String]("artifact") -> r.getAs[Long]("n_rows")).toMap
       // every artifact of the reference's publish stage is reported
       assert(counts.keySet == Set("aircraft_decoded", "owners_clean",
-        "owners_summary", graft.registry.Registry.FtsTable))
+        "owners_summary", ftsTable))
       // the written views hold the lazy views' exact row counts, and
       // the parquet really landed beside the base tables
       val reg = new graft.registry.Registry(
@@ -263,7 +256,7 @@ class CliSpec extends SparkSuite {
       assert(Cli.run(spark, dataRoot,
         Seq("fts", "POLICE", "ANGELES"), _ => ()).get.count() == 1)
     } finally
-      spark.sql(s"DROP TABLE IF EXISTS ${graft.registry.Registry.FtsTable}")
+      spark.sql(s"DROP TABLE IF EXISTS $ftsTable")
   }
 
   test("fts --ranked orders by tf-idf relevance, keeps AND semantics") {

@@ -102,7 +102,7 @@ class RegistrySpec extends SparkSuite {
       // written-index probe returns the same owners as the lazy form
       val written = registry
         .searchOwnersFts(Seq("POLICE", "ANGELES"),
-          indexTable = Some(graft.registry.Registry.FtsTable))
+          indexTable = Some(registry.ftsTable))
         .collect().map(_.getAs[String]("n_number")).toSet
       assert(written == Set("221LA"))
       // with the table present, the default path auto-probes it: the
@@ -116,7 +116,7 @@ class RegistrySpec extends SparkSuite {
       assert(df.collect().map(_.getAs[String]("n_number")).toSet ==
         Set("221LA"))
     } finally
-      spark.sql(s"DROP TABLE IF EXISTS ${graft.registry.Registry.FtsTable}")
+      spark.sql(s"DROP TABLE IF EXISTS ${registry.ftsTable}")
   }
 
   test("layout probes never mutate session conf (autoBucketedScan)") {
@@ -132,7 +132,7 @@ class RegistrySpec extends SparkSuite {
         "FTS probe mutated shared session conf")
     } finally {
       spark.conf.set(key, prior)
-      spark.sql(s"DROP TABLE IF EXISTS ${graft.registry.Registry.FtsTable}")
+      spark.sql(s"DROP TABLE IF EXISTS ${registry.ftsTable}")
       ()
     }
   }
@@ -175,6 +175,107 @@ class RegistrySpec extends SparkSuite {
     assert(registry.status.collect().map(_.getLong(1)).sum == 3 + 3 + 3 + 2 + 2)
     assert(registry.listTables.contains("aircraft_decoded"))
     assert(registry.schemaOf("engines").count() == 6)
+  }
+
+  /** A raw snapshot dir: the fixture's ACFTREF/ENGINE dumps and a
+    * MASTER dump of the fixture's header plus `masterRows`. */
+  private def rawSnapshot(masterRows: Seq[String]): String = {
+    val raw = Files.createTempDirectory("graft_raw_snap").toString
+    for (f <- Seq("ACFTREF.txt", "ENGINE.txt"))
+      Files.copy(java.nio.file.Paths.get(s"${dirs._1}/$f"),
+        java.nio.file.Paths.get(s"$raw/$f"))
+    val header = Files.readAllLines(
+      java.nio.file.Paths.get(s"${dirs._1}/MASTER.txt")).get(0)
+    Files.writeString(java.nio.file.Paths.get(s"$raw/MASTER.txt"),
+      (header +: masterRows).mkString("", "\n", "\n"))
+    raw
+  }
+
+  private val policeLeague = "333CC,SN004,C172,ENG1,2001,4,V,20240101," +
+    "20270101,20010601,1,50000004,A00004,POLICE ATHLETIC LEAGUE," +
+    "1 PARK AVE,,NEW YORK,NY,10001,3"
+
+  test("registry tables read with their declared schemas match the written files") {
+    for (t <- Registry.tableNames) {
+      def shape(st: org.apache.spark.sql.types.StructType) =
+        st.fields.toSeq.map(f => f.name -> f.dataType)
+      assert(shape(registry.table(t).schema) ==
+        shape(spark.read.parquet(s"${dirs._2}/$t.parquet").schema), t)
+    }
+  }
+
+  test("registry calls launch no metadata jobs (search, fleet, query, schema, status)") {
+    def calls(): Unit = {
+      registry.search("N221LA")
+      registry.fleet("LAPD|LOS ANGELES POLICE", Some("CA"))
+      registry.query("SELECT maker, count(*) AS n FROM aircraft_decoded GROUP BY maker")
+      registry.schemaOf("engines")
+      registry.schemaOf("aircraft_decoded")
+      registry.status.collect()
+      ()
+    }
+    calls() // warm: class loading and first-use session state
+    val jobs = jobsLaunchedBy(calls())
+    assert(jobs == 0, s"registry calls launched $jobs jobs")
+  }
+
+  test("a live Registry sees a re-publish into its dir (search, status)") {
+    val master = Files.readAllLines(
+      java.nio.file.Paths.get(s"${dirs._1}/MASTER.txt"))
+    val rows = (1 until master.size).map(master.get)
+      .filter(_.trim.nonEmpty)
+    val pub = Files.createTempDirectory("graft_pub_live").toString
+    RegistryNormalize.normalize(spark, rawSnapshot(rows), pub)
+    val reg = new Registry(spark, pub)
+    assert(reg.search("N333CC").count() == 0)
+    def counts() = reg.status.collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts()("aircraft") == rows.length)
+    RegistryNormalize.normalize(spark, rawSnapshot(rows :+ policeLeague), pub)
+    val hit = reg.search("N333CC").collect()
+    assert(hit.length == 1 &&
+      hit.head.getAs[String]("owner_name") == "POLICE ATHLETIC LEAGUE")
+    val after = counts()
+    assert(Seq("aircraft", "registrations", "owners")
+      .forall(t => after(t) == rows.length + 1), after)
+  }
+
+  test("each registry probes the FTS index written for its own data dir") {
+    val pubB = Files.createTempDirectory("graft_pub_fts_b").toString
+    RegistryNormalize.normalize(spark, rawSnapshot(Seq(policeLeague)), pubB)
+    val a = registry
+    val b = new Registry(spark, pubB)
+    a.writeFtsIndex(numBuckets = 4)
+    b.writeFtsIndex(numBuckets = 4)
+    try {
+      def nNumbers(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.getAs[String]("n_number")).toSet
+      assert(nNumbers(a.searchOwnersFts(Seq("POLICE"))) == Set("221LA"))
+      assert(nNumbers(b.searchOwnersFts(Seq("POLICE"))) == Set("333CC"))
+      // the ranked idf uses the probed index's own doc_count (3 owners
+      // in A, df = 1 for POLICE)
+      val ranked = a.searchOwnersFtsRanked(Seq("POLICE")).collect()
+      val idf = math.log(1 + (3 - 1 + 0.5) / (1 + 0.5))
+      assert(ranked.map(_.getAs[String]("n_number")).toSeq == Seq("221LA"))
+      assert(ranked.head.getAs[Double]("score") ==
+        math.floor(idf * 10000) / 10000)
+      assert(nNumbers(b.searchOwnersFtsRanked(Seq("POLICE"))) ==
+        Set("333CC"))
+    } finally Seq(a, b).foreach(r =>
+      spark.sql(s"DROP TABLE IF EXISTS ${r.ftsTable}"))
+  }
+
+  test("every spelling of one data dir names the same FTS index") {
+    val dir = java.nio.file.Paths.get(dirs._2).toAbsolutePath.normalize
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    val rel = cwd.relativize(dir).toString
+    val spellings = Seq(dir.toString, s"$dir/", s"$dir/./",
+      dir.toString.replaceFirst("/([^/]+)$", "//$1"),
+      rel, s"./$rel", s"file://$dir")
+    assert(spellings.map(new Registry(spark, _).ftsTable).toSet ==
+      Set(registry.ftsTable), spellings)
+    assert(new Registry(spark, s"$dir/elsewhere").ftsTable !=
+      registry.ftsTable)
   }
 
   test("freshnessReport folds manifest counts, age and staleness into one table") {

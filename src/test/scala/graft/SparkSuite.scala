@@ -20,4 +20,30 @@ trait SparkSuite extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs launched while `body` runs. A fence job run after
+    * `body` marks the end: the listener bus delivers events in order,
+    * so once the fence's start arrives every earlier job is counted. */
+  def jobsLaunchedBy(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties.getProperty("spark.job.description") == "fence")
+          fence.countDown()
+        else { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("fence")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "fence job never reached the listener")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }

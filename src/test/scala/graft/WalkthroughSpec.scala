@@ -90,7 +90,8 @@ class WalkthroughSpec extends SparkSuite {
       assert(audit.nonEmpty && audit.forall(_.schema.fieldNames
         .contains("check_name")))
     } finally
-      spark.sql(s"DROP TABLE IF EXISTS ${registry.Registry.FtsTable}")
+      spark.sql("DROP TABLE IF EXISTS " +
+        new registry.Registry(spark, s"$root/publish").ftsTable)
 
     // §5 corpus analytics over the testdata tables
     for (key <- Seq("d01_exact_dedup", "d02_minhash_pairs",
